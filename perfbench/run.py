@@ -62,7 +62,7 @@ def git_sha() -> str | None:
 
 
 def java_version() -> str:
-    out = subprocess.run(["java", "-version"], capture_output=True, text=True)
+    out = subprocess.run(["java", "-XX:-UsePerfData", "-version"], capture_output=True, text=True)
     return (out.stderr.splitlines() or ["unknown"])[0]
 
 
@@ -117,6 +117,8 @@ def main() -> int:
         SPARK_LOCAL_DIRS=os.path.join(work, "local"),
         SPARK_CONF_DIR=sparktrace.spark_conf_dir(os.path.join(work, "conf"), work, bool(args.trace)),
         TMPDIR=os.path.join(work, "tmp"),
+        # the launcher JVM of spark-submit would write /tmp/hsperfdata_*
+        SPARK_LAUNCHER_OPTS="-XX:-UsePerfData",
         PYTHONPATH=os.pathsep.join(p for p in (ROOT, HERE, env.get("PYTHONPATH")) if p),
     )
     env.setdefault("PYSPARK_PYTHON", sys.executable)
