@@ -345,7 +345,8 @@ def main() -> int:
     if trace:
         layer.update(layer_metrics(args, runner, spans, len(passes)))
         result["layers"] = layer
-        with open(os.path.join(args.work, "spans.json"), "w") as f:
+        # beside the run directory, which run.py removes
+        with open(os.path.join(os.path.dirname(args.work), f"spans-{args.workload}.json"), "w") as f:
             json.dump(spans.items, f)
     result.update(attempted=ledger.attempted, failed=ledger.failed, failures=ledger.failures)
     with open(args.out, "w") as f:
