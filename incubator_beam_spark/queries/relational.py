@@ -75,7 +75,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q3_shipping_priority",
     oracle="""
     SELECT l_orderkey,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           CAST(round(sum(l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT) AS revenue_um,
            o_orderdate, o_orderpriority
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -84,12 +84,16 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
       AND l_shipdate  > TIMESTAMP '1998-01-01 00:00:00'
     GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, l_orderkey
+    ORDER BY revenue_um DESC, l_orderkey
     LIMIT 10
     """,
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join fact→dims with pre-join filters, agg, deterministic top-k."""
+    """Join fact→dims with pre-join filters, agg, deterministic top-k.
+
+    Revenue is in exact 1e-4 units (price 2dp x (1-discount) 2dp = 4dp
+    terms): a sum rounded to cents can tie at half a cent, and Spark and
+    DuckDB round that tie apart."""
     cust = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
@@ -102,13 +106,13 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            )
+            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 10000)
+            .cast("bigint")
+            .alias("revenue_um")
         )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
+        .orderBy(F.desc("revenue_um"), F.asc("l_orderkey"))
         .limit(10)
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
+        .select("l_orderkey", "revenue_um", "o_orderdate", "o_orderpriority")
     )
 
 

@@ -24,8 +24,8 @@ def stream_table(
 ) -> DataFrame:
     """Read a fixture table as an unbounded stream (file source).
 
-    Schema comes from a bounded peek (streaming reads require an explicit
-    schema); the nanos->timestamp normalization matches catalog.table.
+    Schema comes from the catalog's resolver (streaming reads require an
+    explicit schema); timestamps are normalized as in catalog.table.
 
     ``watermark_sentinel_ts`` (e.g. "2099-01-01"): stage an extra
     one-row parquet whose ``ts`` is that instant, mtime-ordered AFTER the
@@ -36,14 +36,15 @@ def stream_table(
     The sentinel row carries ``event_id = -1``; filter it out of the
     data path (watermark tracking happens before user filters).
     """
-    from ..catalog import _ensure_session_confs
+    from ..catalog import _ensure_session_confs, normalize_timestamps, read_parquet
 
     # Pin UTC + nanosAsLong on a FOREIGN session (the driver's) here too:
-    # the NTZ->timestamp cast below is exact only under UTC, and relying
-    # on an earlier catalog.table() call having set it is order-fragile.
+    # the NTZ->timestamp cast of normalize_timestamps is exact only under
+    # UTC, and relying on an earlier catalog.table() call having set it is
+    # order-fragile.
     _ensure_session_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    bounded = spark.read.parquet(path)
+    bounded = read_parquet(spark, path)
     # FileStreamSource requires a directory; fixtures are single files.
     # Stage a symlink in a temp dir (no data copy) and stream that dir.
     stage = tempfile.mkdtemp(prefix=f"stream_{name}_")
@@ -58,20 +59,7 @@ def stream_table(
     reader = spark.readStream.schema(bounded.schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(stage)
-    if name == "events":
-        from pyspark.sql.types import LongType
-
-        if isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    # TIMESTAMP_NTZ -> TIMESTAMP under the pinned UTC session tz (exact);
-    # withWatermark/window/session_window require the instant-based type.
-    from pyspark.sql.types import TimestampNTZType
-
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
-    if ntz:
-        df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
-    return df
+    return normalize_timestamps(name, reader.parquet(stage))
 
 
 def _write_sentinel(

@@ -47,3 +47,21 @@ def test_rows_only_runs(spark, name):
     df = q.fn(spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+def test_q3_revenue_exact_at_half_cent_tie(spark, tmp_path):
+    """Generated sf0.01 tables at seed 202 hold an order whose exact
+    revenue, 412075.8350, ties at half a cent. Rounded to cents, Spark and
+    DuckDB rounded it apart; in integer 1e-4 units both sides agree."""
+    import duckdb
+
+    from incubator_beam_spark.catalog import TABLES
+    from perfbench import datagen
+
+    datagen.write_tables(str(tmp_path), seed=202, sf=0.01)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')")
+    q = ALL["q3_shipping_priority"]
+    assert_matches_oracle(q.fn(spark, str(tmp_path)), con, q.oracle, q.name)
+    con.close()

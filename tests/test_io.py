@@ -399,3 +399,90 @@ def test_python_datasource_stream_replay_is_bit_identical():
             assert ba == bb
             # replaying the SAME reader must also be stable
             assert ba == [rb.to_pydict() for rb in r1.read(a)]
+
+
+# -- catalog: each path's parquet schema is inferred once --------------------
+
+
+def _jobs_launched(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and job count."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"catalog-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "catalog schema cache test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_region(path, **extra):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {"r_regionkey": pa.array([0, 1], pa.int32()), "r_name": ["A", "B"], **extra}
+    pq.write_table(pa.table(cols), path)
+
+
+def test_catalog_second_read_launches_no_job(spark):
+    from incubator_beam_spark.catalog import table
+
+    from .conftest import SF_DIR
+
+    path = os.path.join(SF_DIR, "lineitem.parquet")
+    _, bare = _jobs_launched(spark, lambda: spark.read.parquet(path))
+    assert bare >= 1  # schema inference is a job, so the count below means something
+    first = table(spark, SF_DIR, "lineitem")
+    second, jobs = _jobs_launched(spark, lambda: table(spark, SF_DIR, "lineitem"))
+    assert jobs == 0
+    assert second.schema == first.schema
+
+
+def test_catalog_rewritten_file_reinfers(spark, tmp_path):
+    import pyarrow as pa
+
+    from incubator_beam_spark.catalog import table
+
+    path = str(tmp_path / "region.parquet")
+    _write_region(path)
+    assert table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    _write_region(path, r_comment=pa.array(["x", "y"]))
+    again = table(spark, str(tmp_path), "region")
+    assert again.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert again.count() == 2
+
+
+def test_catalog_reader_conf_change_reinfers(spark, tmp_path):
+    import pyarrow as pa
+    from pyspark.sql.types import BinaryType, StringType
+
+    from incubator_beam_spark.catalog import table
+
+    _write_region(str(tmp_path / "region.parquet"), r_comment=pa.array([b"x", b"y"], pa.binary()))
+    conf = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "false")
+        assert isinstance(table(spark, str(tmp_path), "region").schema["r_comment"].dataType, BinaryType)
+        spark.conf.set(conf, "true")
+        assert isinstance(table(spark, str(tmp_path), "region").schema["r_comment"].dataType, StringType)
+    finally:
+        spark.conf.set(conf, before)
+
+
+def test_catalog_reads_self_join(spark, duck):
+    """Only the schema is shared: two reads are distinct relations, so a
+    self-join on distinct columns resolves each side to its own read."""
+    from incubator_beam_spark.catalog import table
+
+    from .conftest import SF_DIR
+
+    a = table(spark, SF_DIR, "lineitem")
+    b = table(spark, SF_DIR, "lineitem")
+    got = a.join(b, a["l_orderkey"] == b["l_partkey"]).count()
+    want = duck.execute(
+        "SELECT count(*) FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_partkey"
+    ).fetchone()[0]
+    assert got == want
