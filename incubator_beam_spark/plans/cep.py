@@ -26,20 +26,34 @@ Spark-first design (not a port of the NFA):
   single giant key (all rows of one key sit in one task) — same
   contract as SQL MATCH_RECOGNIZE's PARTITION BY everywhere.
 
-Measures supported: ``("first", SYM, col)``, ``("last", SYM, col)``,
-``("count", SYM)`` (rows), ``("count", SYM, col)`` (non-null values of
-``col`` on SYM's rows — SQL ``COUNT(Sym.col)``), plus ``match_number``
-implicitly; ``SYM=None`` means any row of the match. Under
-``all_rows=True`` an optional 4th element selects ``"running"``
-(default — prefix scan up to the current row) or ``"final"``
-(whole-match value on every row).
+Both kernels — batch ``match_recognize`` and the incremental
+``match_recognize_stream`` — share one front end (``_compile``: DEFINE /
+PATTERN / MEASURES / SUBSET / AFTER MATCH SKIP validation, the classifier
+column and the output schema), one per-match emitter (``_match_rows``
+over the ONE ROW evaluator ``_one_row_values`` and the ALL ROWS
+evaluator ``_running_measure_values``) and one NFA scan with its AFTER
+MATCH SKIP restart (``_stable_scan`` / ``_restart``).
+
+Measures supported (``SYM=None`` means any row of the match; ``SYM``
+may also be a SUBSET name, ranging over its members' rows):
+``("count", SYM)`` (rows) and ``("count", SYM, col)`` (non-null values of
+``col`` on SYM's rows — SQL ``COUNT(Sym.col)``); ``("first"|"last", SYM,
+col[, n])`` with an optional LOGICAL OFFSET ``n``; the aggregates
+``("sum"|"avg"|"min"|"max", SYM, col)`` (nulls skipped); plus
+``match_number`` implicitly and, with ``with_classifier=True``, the ONE
+ROW CLASSIFIER() (the last matched row's symbol). Under
+``all_rows=True`` an optional trailing ``"running"`` (default — prefix
+scan up to the current row) or ``"final"`` (whole-match value on every
+row) picks the measure mode, and every row carries its classifier.
 """
 
 from __future__ import annotations
 
 import re
 import string
-from collections.abc import Iterator
+from datetime import date
+from decimal import Decimal
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -47,11 +61,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_QUANT = r"(?:[?*+]|\{\d+(?:,\d*)?\})\??|"
-_TOKEN = re.compile(
-    r"\s+|(?P<sym>[A-Za-z_][A-Za-z_0-9]*)(?P<quant>" + _QUANT + r")"
-    r"|(?P<punct>[()|])(?P<pquant>" + _QUANT + r")"
-)
+from .nfa import _TOKEN, NFA, parse_quant, trail_bindings
 
 
 def _sym_chars(define: dict) -> dict[str, str]:
@@ -215,6 +225,188 @@ def _running_measure_values(specs, arrs, pairs):
     return per_spec
 
 
+def _one_row_values(fe, lo, hi, arrs, syms=None, assignment=None):
+    """ONE ROW PER MATCH cells of the match over rows ``[lo, hi)``:
+    CLASSIFIER() when ``fe.with_classifier``, then one value per measure
+    of ``fe.specs``. ``arrs`` maps column name -> indexable values of the
+    key's ordered rows. Symbol attribution comes from the NFA's
+    ``assignment`` (``[(row, symbol), ...]``) when given — rows taken by
+    callable defines carry no classifier char — else from ``syms``, the
+    classifier-char string (C-level scans). Shared by the batch kernel's
+    per-match path and the streaming kernel."""
+    sym_chars = fe.sym_chars
+    if assignment is not None:
+        pos_by_sym: dict[str, list[int]] = {}
+        for idx, s in assignment:
+            pos_by_sym.setdefault(s, []).append(idx)
+    vals = []
+    if fe.with_classifier:
+        # CLASSIFIER() under ONE ROW PER MATCH: the LAST row's symbol
+        vals.append(
+            assignment[-1][1] if assignment else fe.name_by_char[syms[hi - 1]]
+        )
+    for kind, sym, col, off, _mode in fe.specs:
+        if kind in _AGG_KINDS or isinstance(sym, frozenset) or off:
+            # generic path: ordered row indices of the match belonging
+            # to sym (a name, a SUBSET frozenset, or None = every row)
+            if sym is None:
+                idxs = range(lo, hi)
+            elif assignment is None:
+                chars = {
+                    sym_chars[s] for s in ((sym,) if isinstance(sym, str) else sym)
+                }
+                idxs = [i for i in range(lo, hi) if syms[i] in chars]
+            else:
+                names = (sym,) if isinstance(sym, str) else sym
+                idxs = sorted(i for s in names for i in pos_by_sym.get(s, ()))
+            if kind == "count":
+                if col is None:
+                    vals.append(len(idxs))
+                else:
+                    a = arrs[col]
+                    vals.append(sum(1 for i in idxs if not pd.isna(a[i])))
+                continue
+            if kind in ("first", "last"):
+                if len(idxs) <= off:
+                    i = -1
+                else:
+                    i = idxs[off] if kind == "first" else idxs[-1 - off]
+                vals.append(arrs[col][i] if i >= 0 else None)
+                continue
+            a = arrs[col]
+            xs = [a[i] for i in idxs if not pd.isna(a[i])]
+            if not xs:
+                vals.append(None)
+            elif kind == "sum":
+                vals.append(sum(xs))
+            elif kind == "avg":
+                vals.append(float(sum(xs)) / len(xs))
+            elif kind == "min":
+                vals.append(min(xs))
+            else:
+                vals.append(max(xs))
+            continue
+        if kind == "count":
+            if col is not None:
+                # COUNT(Sym.col): non-null col values among Sym's rows
+                if assignment is None:
+                    ch = sym_chars[sym] if sym is not None else None
+                    idxs = (
+                        i for i in range(lo, hi) if ch is None or syms[i] == ch
+                    )
+                else:
+                    idxs = (
+                        pos_by_sym.get(sym, ())
+                        if sym is not None
+                        else (i for i, _ in assignment)
+                    )
+                a = arrs[col]
+                vals.append(sum(1 for i in idxs if not pd.isna(a[i])))
+            elif sym is None:
+                vals.append(hi - lo)
+            elif assignment is None:
+                vals.append(syms.count(sym_chars[sym], lo, hi))
+            else:
+                vals.append(len(pos_by_sym.get(sym, ())))
+            continue
+        if kind == "first":
+            if sym is None:
+                i = lo
+            elif assignment is None:
+                i = syms.find(sym_chars[sym], lo, hi)
+            else:
+                p = pos_by_sym.get(sym)
+                i = p[0] if p else -1
+        elif kind == "last":
+            if sym is None:
+                i = hi - 1
+            elif assignment is None:
+                i = syms.rfind(sym_chars[sym], lo, hi)
+            else:
+                p = pos_by_sym.get(sym)
+                i = p[-1] if p else -1
+        else:
+            raise ValueError(f"unknown measure kind {kind!r}")
+        vals.append(arrs[col][i] if i >= 0 else None)
+    return vals
+
+
+def _match_rows(fe, key_vals, matches, arrs, syms, order_by, match_no=0):
+    """Output rows of ``matches`` (``(lo, hi, assignment)``, numbered
+    from ``match_no + 1``), shared by both kernels. ONE ROW PER MATCH:
+    key, match_number, ``_one_row_values``. ALL ROWS PER MATCH: one row
+    per matched input row — key, match_number, the row's symbol, its
+    ``order_by`` values and the ``_running_measure_values``. A None
+    assignment attributes rows by their ``syms`` chars."""
+    out = []
+    for lo, hi, assignment in matches:
+        match_no += 1
+        if not fe.all_rows:
+            vals = _one_row_values(fe, lo, hi, arrs, syms, assignment)
+            out.append([*key_vals, match_no, *vals])
+            continue
+        pairs = assignment or [
+            (i, fe.name_by_char[syms[i]]) for i in range(lo, hi)
+        ]
+        mvals = _running_measure_values(fe.specs, arrs, pairs)
+        for pos, (idx, sym) in enumerate(pairs):
+            out.append(
+                [*key_vals, match_no, sym]
+                + [arrs[c][idx] for c in order_by]
+                + [mv[pos] for mv in mvals]
+            )
+    return out
+
+
+class _SymMasks:
+    """Per-key symbol membership masks over the classifier-char string
+    and their zero-padded prefix counts, each built once per key: the
+    shared setup of the vectorized emitters. Hits of a mask in rows
+    ``[lo, hi)`` are ``cum[hi] - cum[lo]``."""
+
+    def __init__(self, syms: str, sym_chars: dict[str, str]):
+        # utf-32-le = one uint32 per char, valid for A-Z and the
+        # private-use classifier chars beyond 26 symbols alike
+        self.codes = np.frombuffer(syms.encode("utf-32-le"), dtype=np.uint32)
+        self._sym_chars = sym_chars
+        self._masks: dict = {}
+        self._cums: dict = {}
+
+    def mask(self, symk):
+        """Rows attributed to ``symk``: a symbol name or a SUBSET
+        frozenset of names."""
+        mk = self._masks.get(symk)
+        if mk is None:
+            if isinstance(symk, str):
+                mk = self.codes == ord(self._sym_chars[symk])
+            else:
+                mk = np.zeros(self.codes.shape[0], dtype=bool)
+                for s in symk:
+                    mk |= self.codes == ord(self._sym_chars[s])
+            self._masks[symk] = mk
+        return mk
+
+    def cum(self, key, mk):
+        """``[0, *cumsum(mk)]``, cached under ``key``."""
+        c = self._cums.get(key)
+        if c is None:
+            c = np.concatenate(([0], np.cumsum(mk, dtype=np.int64)))
+            self._cums[key] = c
+        return c
+
+
+def _null_array(n: int, dtype) -> np.ndarray:
+    """All-null output column of length ``n``. Datetime sources stay
+    NATIVE datetime64 + NaT: numpy silently converts datetime64 elements
+    assigned into an object array to raw Python ints (epoch nanos),
+    which the Spark serializer would then read as microseconds."""
+    if dtype.kind == "M":
+        return np.full(n, np.datetime64("NaT"), dtype=dtype)
+    out = np.empty(n, dtype=object)
+    out[:] = None
+    return out
+
+
 def _split_last_atom(pat: str) -> tuple[str, str, str]:
     """Split a compiled char-regex into (prefix, last_atom, quantifier).
     last_atom is a single symbol char or a '(...)' group; quantifier is
@@ -292,8 +484,6 @@ def _quant_bounds(quant: str) -> tuple[int, int | None, bool]:
         return 0, None, reluctant
     if core == "+":
         return 1, None, reluctant
-    from .nfa import parse_quant
-
     mn, mx, _ = parse_quant(core)
     return mn, mx, reluctant
 
@@ -380,6 +570,127 @@ def _compile_pattern(pattern: str, sym_chars: dict[str, str]) -> re.Pattern:
     return re.compile("".join(out))
 
 
+class _Compiled(NamedTuple):
+    """The arguments both kernels share, validated and compiled once by
+    ``_compile``. Holds no JVM objects, so the per-key kernels may close
+    over it."""
+
+    measures: dict  # output name -> (kind, sym, col, offset, mode)
+    specs: list  # measures.values(), in output order
+    sym_chars: dict
+    name_by_char: dict
+    rx: re.Pattern  # PATTERN as a regex over classifier chars
+    nfa: NFA
+    col_syms: list  # symbols with a boolean Column define, define order
+    fn_defines: dict  # symbol -> callable define
+    measure_cols: list
+    skip_sym: "str | None"
+    skip_first: bool
+    all_rows: bool
+    with_classifier: bool
+
+    def output_schema(self, schema, partition_by, order_by) -> T.StructType:
+        """ONE ROW: partition cols, match_number, [classifier], measures.
+        ALL ROWS: partition cols, match_number, classifier, order cols,
+        measures. ``schema`` is the kernel's projected input: COUNT is
+        LONG, AVG DOUBLE, every other measure keeps its column's type."""
+
+        def _measure_field(name: str, spec: tuple) -> T.StructField:
+            if spec[0] == "count":
+                return T.StructField(name, T.LongType())
+            if spec[0] == "avg":
+                return T.StructField(name, T.DoubleType())
+            return T.StructField(name, schema[spec[2]].dataType)
+
+        fields = [schema[c] for c in partition_by]
+        fields.append(T.StructField("match_number", T.LongType()))
+        if self.all_rows or self.with_classifier:
+            fields.append(T.StructField("classifier", T.StringType()))
+        if self.all_rows:
+            fields += [schema[c] for c in order_by]
+        fields += [_measure_field(n, s) for n, s in self.measures.items()]
+        return T.StructType(fields)
+
+
+def _compile(
+    define, pattern, measures, after_match, all_rows, subsets, with_classifier
+) -> tuple[_Compiled, Column]:
+    """The front end both kernels share: validate DEFINE, SUBSET,
+    MEASURES (SUBSET names resolved to frozensets of members), AFTER
+    MATCH SKIP and the output mode, and compile the pattern. Returns the
+    compiled arguments and the classifier Column: per row the char of
+    the first COLUMN define it satisfies, else '.' (decisive only where
+    each row satisfies at most one define)."""
+    if not define:
+        raise ValueError("define must not be empty")
+    subsets = subsets or {}
+    for uname, members in subsets.items():
+        if uname in define:
+            raise ValueError(f"SUBSET name {uname!r} collides with a DEFINE symbol")
+        bad = [m for m in members if m not in define]
+        if bad:
+            raise ValueError(f"SUBSET {uname!r} members {bad} not in define")
+    measures = {
+        name: _norm_spec(
+            name,
+            (
+                spec[0],
+                frozenset(subsets[spec[1]])
+                if isinstance(spec[1], str) and spec[1] in subsets
+                else spec[1],
+                *spec[2:],
+            ),
+        )
+        for name, spec in measures.items()
+    }
+    for name, spec in measures.items():
+        if isinstance(spec[1], str) and spec[1] not in define:
+            raise ValueError(
+                f"measure {name!r} references symbol {spec[1]!r} — not a "
+                "DEFINE symbol or SUBSET name"
+            )
+    if with_classifier and all_rows:
+        raise ValueError(
+            "with_classifier applies to ONE ROW PER MATCH only "
+            "(ALL ROWS already emits a per-row classifier column)"
+        )
+    skip_sym: str | None = None
+    skip_first = False
+    m_skip = re.match(r"to (first|last) (\w+)$", after_match)
+    if m_skip:
+        skip_first = m_skip.group(1) == "first"
+        skip_sym = m_skip.group(2)
+        if skip_sym not in define:
+            raise ValueError(f"AFTER MATCH SKIP target {skip_sym!r} not in define")
+    elif after_match not in ("past last row", "to next row"):
+        raise ValueError(f"unsupported AFTER MATCH SKIP mode {after_match!r}")
+
+    sym_chars = _sym_chars(define)
+    rx = _compile_pattern(pattern, sym_chars)
+    col_syms = [n for n, d in define.items() if isinstance(d, Column)]
+    classifier: Column = F.lit(".")
+    for name in reversed(col_syms):
+        classifier = F.when(define[name], F.lit(sym_chars[name])).otherwise(
+            classifier
+        )
+    fe = _Compiled(
+        measures=measures,
+        specs=list(measures.values()),
+        sym_chars=sym_chars,
+        name_by_char={c: n for n, c in sym_chars.items()},
+        rx=rx,
+        nfa=NFA(pattern),
+        col_syms=col_syms,
+        fn_defines={n: d for n, d in define.items() if not isinstance(d, Column)},
+        measure_cols=sorted({spec[2] for spec in measures.values() if spec[2]}),
+        skip_sym=skip_sym,
+        skip_first=skip_first,
+        all_rows=all_rows,
+        with_classifier=with_classifier,
+    )
+    return fe, classifier
+
+
 def match_recognize(
     df: DataFrame,
     partition_by: list[str],
@@ -454,73 +765,15 @@ def match_recognize(
     row's symbol — the SQL standard's CLASSIFIER() under ONE ROW PER
     MATCH.
     """
-    if not define:
-        raise ValueError("define must not be empty")
-    subsets = subsets or {}
-    for uname, members in subsets.items():
-        if uname in define:
-            raise ValueError(f"SUBSET name {uname!r} collides with a DEFINE symbol")
-        bad = [m for m in members if m not in define]
-        if bad:
-            raise ValueError(f"SUBSET {uname!r} members {bad} not in define")
-    # resolve subset names in measure specs to frozensets of member symbols
-    measures = {
-        name: _norm_spec(
-            name,
-            (
-                spec[0],
-                frozenset(subsets[spec[1]])
-                if isinstance(spec[1], str) and spec[1] in subsets
-                else spec[1],
-                *spec[2:],
-            ),
-        )
-        for name, spec in measures.items()
-    }
-    for name, spec in measures.items():
-        if isinstance(spec[1], str) and spec[1] not in define:
-            raise ValueError(
-                f"measure {name!r} references symbol {spec[1]!r} — not a "
-                "DEFINE symbol or SUBSET name"
-            )
-    if with_classifier and all_rows:
-        raise ValueError(
-            "with_classifier applies to ONE ROW PER MATCH only "
-            "(ALL ROWS already emits a per-row classifier column)"
-        )
-    skip_sym: str | None = None
-    skip_first = False
-    m_skip = re.match(r"to (first|last) (\w+)$", after_match)
-    if m_skip:
-        skip_first = m_skip.group(1) == "first"
-        skip_sym = m_skip.group(2)
-        if skip_sym not in define:
-            raise ValueError(f"AFTER MATCH SKIP target {skip_sym!r} not in define")
-    elif after_match not in ("past last row", "to next row"):
-        raise ValueError(f"unsupported AFTER MATCH SKIP mode {after_match!r}")
-    from .nfa import NFA, trail_bindings
-
-    sym_chars = _sym_chars(define)
-    rx = _compile_pattern(pattern, sym_chars)
-    nfa = NFA(pattern)
+    fe, classifier = _compile(
+        define, pattern, measures, after_match, all_rows, subsets, with_classifier
+    )
+    sym_chars, specs, name_by_char = fe.sym_chars, fe.specs, fe.name_by_char
+    rx, nfa, fn_defines = fe.rx, fe.nfa, fe.fn_defines
     nfa_first, nfa_nullable = nfa.first_symbols()
-    unknown = nfa.symbols - set(define)
-    if unknown:
-        raise ValueError(f"pattern symbols {sorted(unknown)} not in define")
-
-    col_defines = {n: d for n, d in define.items() if isinstance(d, Column)}
-    fn_defines = {n: d for n, d in define.items() if not isinstance(d, Column)}
     force_nfa = after_match != "past last row" and _is_nullable(rx.pattern)
 
-    # classifier char: first matching COLUMN define, else '.' (used only on
-    # the mutually-exclusive fast path, where first-match == unique match)
-    classifier: Column = F.lit(".")
-    for name in reversed(list(col_defines)):
-        classifier = F.when(col_defines[name], F.lit(sym_chars[name])).otherwise(
-            classifier
-        )
-
-    measure_cols = sorted({spec[2] for spec in measures.values() if spec[2]})
+    measure_cols = fe.measure_cols
     # shuffle width: keep only the columns the kernel can prove it needs.
     # Compiled DEFINE conditions (plans/cepdefine.py) declare their
     # column set as fn.columns; an OPAQUE user callable may inspect any
@@ -541,171 +794,24 @@ def match_recognize(
         base_cols = list(df.columns)
     else:
         base_cols = list(dict.fromkeys([*partition_by, *order_by, *measure_cols]))
-    bool_cols = {n: f"__d_{i}" for i, n in enumerate(col_defines)}
+    bool_cols = {n: f"__d_{i}" for i, n in enumerate(fe.col_syms)}
     proj = df.select(
         *base_cols,
         classifier.alias("__sym"),
-        *[col_defines[n].cast("boolean").alias(c) for n, c in bool_cols.items()],
+        *[define[n].cast("boolean").alias(c) for n, c in bool_cols.items()],
     )
 
-    part_fields = [proj.schema[c] for c in partition_by]
-
-    def _measure_field(name: str, spec: tuple) -> T.StructField:
-        if spec[0] == "count":
-            return T.StructField(name, T.LongType())
-        if spec[0] == "avg":
-            return T.StructField(name, T.DoubleType())
-        return T.StructField(name, proj.schema[spec[2]].dataType)
-
-    if all_rows:
-        out_schema = T.StructType(
-            [*part_fields]
-            + [
-                T.StructField("match_number", T.LongType()),
-                T.StructField("classifier", T.StringType()),
-            ]
-            + [proj.schema[c] for c in order_by]
-            + [_measure_field(n, s) for n, s in measures.items()]
-        )
-    else:
-        out_schema = T.StructType(
-            [*part_fields]
-            + [T.StructField("match_number", T.LongType())]
-            + (
-                [T.StructField("classifier", T.StringType())]
-                if with_classifier
-                else []
-            )
-            + [_measure_field(n, s) for n, s in measures.items()]
-        )
+    out_schema = fe.output_schema(proj.schema, partition_by, order_by)
     out_cols = [f.name for f in out_schema.fields]
-
-    specs = list(measures.values())
     data_cols = [c for c in base_cols]
-    name_by_char = {c: n for n, c in sym_chars.items()}
-
-    def _span_idxs(sym, lo, hi, syms, pos_by_sym, assignment):
-        """Ordered row indices of the match belonging to ``sym`` (a
-        symbol name, a frozenset — SUBSET union — or None = every match
-        row). Generic path for subset/aggregate measures; plain-symbol
-        first/last/count keep their C-level string scans."""
-        if syms is not None:
-            if sym is None:
-                return range(lo, hi)
-            chars = {
-                sym_chars[s] for s in ((sym,) if isinstance(sym, str) else sym)
-            }
-            return [i for i in range(lo, hi) if syms[i] in chars]
-        if sym is None:
-            return sorted(i for i, _ in assignment)
-        names = (sym,) if isinstance(sym, str) else sym
-        out: list[int] = []
-        for s in names:
-            out.extend(pos_by_sym.get(s, ()))
-        out.sort()
-        return out
-
-    _AGGS = ("sum", "avg", "min", "max")
-
-    def _emit(key_vals, match_no, lo, hi, arrs, syms=None, assignment=None):
-        """One output row from either kernel. ``syms`` drives the C-level
-        string measures (fast path); ``assignment`` the NFA positions."""
-        if assignment is not None:
-            pos_by_sym: dict[str, list[int]] = {}
-            for idx, s in assignment:
-                pos_by_sym.setdefault(s, []).append(idx)
-        else:
-            pos_by_sym = None
-        vals = []
-        if with_classifier:
-            # CLASSIFIER() under ONE ROW PER MATCH: the LAST row's symbol
-            vals.append(
-                assignment[-1][1] if assignment else name_by_char[syms[hi - 1]]
-            )
-        for spec in specs:
-            kind, sym, col, off, _mode = spec
-            if kind in _AGGS or isinstance(sym, frozenset) or off:
-                idxs = _span_idxs(sym, lo, hi, syms, pos_by_sym, assignment)
-                if kind == "count":
-                    if col is None:
-                        vals.append(len(idxs))
-                    else:
-                        a = arrs[col]
-                        vals.append(sum(1 for i in idxs if not pd.isna(a[i])))
-                    continue
-                if kind in ("first", "last"):
-                    idxs = list(idxs)
-                    if len(idxs) <= off:
-                        i = -1
-                    else:
-                        i = idxs[off] if kind == "first" else idxs[-1 - off]
-                    vals.append(arrs[col][i] if i >= 0 else None)
-                    continue
-                a = arrs[col]
-                xs = [a[i] for i in idxs if not pd.isna(a[i])]
-                if not xs:
-                    vals.append(None)
-                elif kind == "sum":
-                    vals.append(sum(xs))
-                elif kind == "avg":
-                    vals.append(float(sum(xs)) / len(xs))
-                elif kind == "min":
-                    vals.append(min(xs))
-                else:
-                    vals.append(max(xs))
-                continue
-            if kind == "count":
-                if col is not None:
-                    # COUNT(Sym.col): non-null col values among Sym's rows
-                    if syms is not None:
-                        ch = sym_chars[sym] if sym is not None else None
-                        idxs = (
-                            i
-                            for i in range(lo, hi)
-                            if ch is None or syms[i] == ch
-                        )
-                    else:
-                        idxs = (
-                            pos_by_sym.get(sym, ())
-                            if sym is not None
-                            else (i for i, _ in assignment)
-                        )
-                    a = arrs[col]
-                    vals.append(sum(1 for i in idxs if not pd.isna(a[i])))
-                elif sym is None:
-                    vals.append(hi - lo)
-                elif syms is not None:
-                    vals.append(syms.count(sym_chars[sym], lo, hi))
-                else:
-                    vals.append(len(pos_by_sym.get(sym, ())))
-                continue
-            if kind == "first":
-                if sym is None:
-                    i = lo
-                elif syms is not None:
-                    i = syms.find(sym_chars[sym], lo, hi)
-                else:
-                    p = pos_by_sym.get(sym)
-                    i = p[0] if p else -1
-            elif kind == "last":
-                if sym is None:
-                    i = hi - 1
-                elif syms is not None:
-                    i = syms.rfind(sym_chars[sym], lo, hi)
-                else:
-                    p = pos_by_sym.get(sym)
-                    i = p[-1] if p else -1
-            else:
-                raise ValueError(f"unknown measure kind {kind!r}")
-            vals.append(arrs[col][i] if i >= 0 else None)
-        return [*key_vals, match_no, *vals]
 
     def _batch_aggs_exact(arrs) -> bool:
         """The batch emitter may only vectorize SUM/AVG when the column
         is integral (prefix/segment arithmetic is exact there; float
         summation order would change the last-bit rounding vs the
         per-match ``sum()``), and MIN/MAX on natively comparable numpy
-        dtypes. Anything else keeps the per-match ``_emit`` loop."""
+        dtypes. Anything else keeps the per-match ``_one_row_values``
+        loop."""
         for kind, _sym, col, _off, _mode in specs:
             if kind in ("sum", "avg"):
                 if arrs[col].dtype.kind not in "iu":
@@ -717,61 +823,25 @@ def match_recognize(
 
     def _emit_batch(key_vals, los, his, arrs, syms):
         """Vectorized ONE ROW PER MATCH emission for the fast path
-        (VERDICT r11 item 5): ``_emit`` cost ~17 us/match in Python
-        measure scans (r11 cProfile: ~0.7 s single-threaded on
+        (VERDICT r11 item 5): ``_one_row_values`` costs ~17 us/match in
+        Python measure scans (r11 cProfile: ~0.7 s single-threaded on
         cep_measures_complete). This computes every measure for ALL
         matches of the key at once — per-symbol membership masks +
         padded prefix counts turn FIRST/LAST/COUNT into O(1) array
         lookups per match, and SUM/MIN/MAX into ``reduceat`` segments
         over the symbol's occurrence list. Value semantics are
-        bit-identical to ``_emit``: FIRST/LAST index rows regardless of
-        NULLs, COUNT(col)/aggregates skip NULLs, empty aggregate spans
-        yield None, AVG divides the exact integral sum as float.
-        Returns the output columns (measures as object arrays — the
-        same cell values ``_emit`` rows would produce)."""
+        bit-identical to ``_one_row_values``: FIRST/LAST index rows
+        regardless of NULLs, COUNT(col)/aggregates skip NULLs, empty
+        aggregate spans yield None, AVG divides the exact integral sum
+        as float. Returns the output columns (measures as object arrays
+        — the same cell values ``_one_row_values`` would produce)."""
         m = los.shape[0]
-        # utf-32-le = one uint32 per char, valid for A-Z and the
-        # private-use classifier chars beyond 26 symbols alike
-        codes = np.frombuffer(syms.encode("utf-32-le"), dtype=np.uint32)
-        mask_cache: dict = {}
-        cum_cache: dict = {}
-
-        def _mask(symk):
-            mk = mask_cache.get(symk)
-            if mk is None:
-                if isinstance(symk, str):
-                    mk = codes == ord(sym_chars[symk])
-                else:
-                    mk = np.zeros(codes.shape[0], dtype=bool)
-                    for s in symk:
-                        mk |= codes == ord(sym_chars[s])
-                mask_cache[symk] = mk
-            return mk
-
-        def _cum(key, mk):
-            c = cum_cache.get(key)
-            if c is None:
-                c = np.concatenate(
-                    ([0], np.cumsum(mk, dtype=np.int64))
-                )
-                cum_cache[key] = c
-            return c
-
-        def _null_col(dtype):
-            """All-null output column. Datetime sources stay NATIVE
-            datetime64 + NaT: numpy silently converts datetime64
-            elements assigned into an object array to raw Python ints
-            (epoch nanos), which the Spark serializer would then read
-            as microseconds."""
-            if dtype.kind == "M":
-                return np.full(m, np.datetime64("NaT"), dtype=dtype)
-            out = np.empty(m, dtype=object)
-            out[:] = None
-            return out
+        sm = _SymMasks(syms, sym_chars)
+        codes, _mask, _cum = sm.codes, sm.mask, sm.cum
 
         def _pick(a, idx_arr, valid):
             """a[idx] where valid, None/NaT elsewhere."""
-            out = _null_col(a.dtype)
+            out = _null_array(m, a.dtype)
             if valid.any():
                 safe = np.where(valid, idx_arr, 0)
                 pv = a[safe]
@@ -819,7 +889,7 @@ def match_recognize(
                         valid = sel >= clo
                     pos = np.flatnonzero(mk)
                     if pos.shape[0] == 0:
-                        cols.append(_null_col(a.dtype))
+                        cols.append(_null_array(m, a.dtype))
                     else:
                         cols.append(
                             _pick(a, pos[np.where(valid, sel, 0)], valid)
@@ -834,7 +904,9 @@ def match_recognize(
             cnt = chi - clo
             nonempty = cnt > 0
             vpos = np.flatnonzero(mk)
-            out = _null_col(a.dtype if kind in ("min", "max") else np.dtype("O"))
+            out = _null_array(
+                m, a.dtype if kind in ("min", "max") else np.dtype("O")
+            )
             if vpos.shape[0] and nonempty.any():
                 av = a[vpos]
                 # sentinel element keeps every reduceat index < len;
@@ -866,7 +938,7 @@ def match_recognize(
         integral columns (exact prefix arithmetic); MIN/MAX only under
         FINAL mode (a per-segment running min cannot be reset by a
         prefix trick) on natively comparable dtypes. Anything else
-        keeps the per-match ``_emit_all_rows`` loop."""
+        keeps the per-match ``_match_rows`` loop."""
         for kind, _sym, col, off, mode in specs:
             mode = mode or "running"
             if mode not in ("running", "final"):
@@ -903,35 +975,8 @@ def match_recognize(
         m = los.shape[0]
         offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
         ridx = np.arange(total, dtype=np.int64) + np.repeat(los - offs, lens)
-        codes = np.frombuffer(syms.encode("utf-32-le"), dtype=np.uint32)
-        mask_cache: dict = {}
-        cum_cache: dict = {}
-
-        def _mask(symk):
-            mk = mask_cache.get(symk)
-            if mk is None:
-                if isinstance(symk, str):
-                    mk = codes == ord(sym_chars[symk])
-                else:
-                    mk = np.zeros(codes.shape[0], dtype=bool)
-                    for s in symk:
-                        mk |= codes == ord(sym_chars[s])
-                mask_cache[symk] = mk
-            return mk
-
-        def _cum(key, mk):
-            c = cum_cache.get(key)
-            if c is None:
-                c = np.concatenate(([0], np.cumsum(mk, dtype=np.int64)))
-                cum_cache[key] = c
-            return c
-
-        def _null_rows(dtype):
-            if dtype.kind == "M":
-                return np.full(total, np.datetime64("NaT"), dtype=dtype)
-            out = np.empty(total, dtype=object)
-            out[:] = None
-            return out
+        sm = _SymMasks(syms, sym_chars)
+        codes, _mask, _cum = sm.codes, sm.mask, sm.cum
 
         cols = [np.full(total, kv, dtype=object) for kv in key_vals]
         cols.append(np.repeat(np.arange(1, m + 1, dtype=np.int64), lens))
@@ -986,7 +1031,7 @@ def match_recognize(
                     sel = np.where(
                         valid, rep_clo if kind == "first" else cr - 1, 0
                     )
-                out = _null_rows(a.dtype)
+                out = _null_array(total, a.dtype)
                 if pos.shape[0] and valid.any():
                     pv = a[pos[sel]]
                     out[valid] = pv[valid]
@@ -1007,8 +1052,7 @@ def match_recognize(
                     cnt = cr - rep_clo
                     s = ps[ridx + 1] - np.repeat(ps[los], lens)
                 nonempty = cnt > 0
-                out = np.empty(total, dtype=object)
-                out[:] = None
+                out = _null_array(total, np.dtype("O"))
                 if kind == "avg":
                     vals_f = s.astype(np.float64) / np.maximum(cnt, 1)
                     out[nonempty] = vals_f[nonempty]
@@ -1021,7 +1065,7 @@ def match_recognize(
             cnt_m = chi - clo
             nonempty_m = cnt_m > 0
             vpos = np.flatnonzero(mk)
-            out = _null_rows(a.dtype)
+            out = _null_array(total, a.dtype)
             if vpos.shape[0] and nonempty_m.any():
                 av = a[vpos]
                 av2 = np.concatenate((av, av[:1]))
@@ -1030,8 +1074,8 @@ def match_recognize(
                 idx[1::2] = chi
                 op = np.minimum if kind == "min" else np.maximum
                 r = op.reduceat(av2, idx)[0::2]
-                mvals = _null_rows(a.dtype)[:m] if a.dtype.kind == "M" else None
                 if a.dtype.kind == "M":
+                    mvals = _null_array(m, a.dtype)
                     mvals[nonempty_m] = r[nonempty_m]
                     out[:] = np.repeat(mvals, lens)
                 else:
@@ -1176,7 +1220,6 @@ def match_recognize(
             arrs = {c: pdf[c].to_numpy() for c in data_cols}
             bools = {n: _np_bool(pdf[c]) for n, c in bool_cols.items()}
         key_vals = [arrs[c][0] for c in partition_by]
-        rows = []
         n = len(pdf)
         # ambiguous iff any row satisfies two column defines or a callable
         # define exists — only then pay for the Python NFA. Nullable
@@ -1191,35 +1234,19 @@ def match_recognize(
             for b in bools.values():
                 stack += b
             ambiguous = bool((stack > 1).any())
-        def _all_rows_measures(pairs):
-            return _running_measure_values(specs, arrs, pairs)
-
-        def _emit_all_rows(match_no, pairs):
-            # ALL ROWS PER MATCH: one row per matched input row
-            pairs = list(pairs)
-            mvals = _all_rows_measures(pairs) if specs else []
-            for pos, (idx, sym_name) in enumerate(pairs):
-                rows.append(
-                    [*key_vals, match_no, sym_name]
-                    + [arrs[c][idx] for c in order_by]
-                    + [mv[pos] for mv in mvals]
-                )
 
         if not ambiguous:
             # fast path: classifier string + host regex (C-level scans)
             syms = "".join(sym_np.tolist())
-            match_no = 0
 
             def host_matches():
                 if after_match == "past last row":
                     yield from (
-                        (m.start(), m.end())
+                        (m.start(), m.end(), None)
                         for m in rx.finditer(syms)
                         if m.end() > m.start()
                     )
                     return
-                # TO NEXT ROW: restart one past each match START;
-                # TO FIRST/LAST <sym>: restart AT that row of the match
                 pos = 0
                 while pos < n:
                     m = rx.search(syms, pos)
@@ -1229,32 +1256,19 @@ def match_recognize(
                     if hi_ == lo_:
                         pos = lo_ + 1
                         continue
-                    yield lo_, hi_
-                    if skip_sym is None:
-                        pos = lo_ + 1
-                    else:
-                        ch = sym_chars[skip_sym]
-                        t = (
-                            syms.find(ch, lo_, hi_)
-                            if skip_first
-                            else syms.rfind(ch, lo_, hi_)
-                        )
-                        if t < 0:
-                            raise ValueError(
-                                f"AFTER MATCH SKIP {after_match}: "
-                                f"{skip_sym} absent from match"
-                            )
-                        if t == lo_:
-                            raise ValueError(
-                                f"AFTER MATCH SKIP {after_match} would "
-                                "re-match the same starting row"
-                            )
-                        pos = t
+                    yield lo_, hi_, None
+                    pos = _restart(
+                        after_match,
+                        fe.skip_sym,
+                        fe.skip_first,
+                        lo_,
+                        hi_,
+                        ((i, name_by_char[syms[i]]) for i in range(lo_, hi_)),
+                    )
 
-            if all_rows:
-                spans = list(host_matches())
-                if spans:
-                    frame = None
+            matches = list(host_matches())
+            if matches:
+                if all_rows:
                     # Engage the batch emitter only past ~256 matched
                     # rows: its fixed per-key numpy setup (classifier
                     # decode, masks, cumsums over the WHOLE key) beats
@@ -1262,58 +1276,29 @@ def match_recognize(
                     # but loses on the many-small-keys shape (measured
                     # r12: 0.43s -> 0.55s kernel wall at ~67 rows/key);
                     # small keys keep the row loop — identical output.
-                    n_matched = sum(hi_ - lo_ for lo_, hi_ in spans)
-                    if n_matched >= _ALL_ROWS_BATCH_MIN and _all_rows_batch_exact(
-                        arrs
-                    ):
-                        los = np.fromiter(
-                            (s[0] for s in spans),
-                            dtype=np.int64,
-                            count=len(spans),
-                        )
-                        his = np.fromiter(
-                            (s[1] for s in spans),
-                            dtype=np.int64,
-                            count=len(spans),
-                        )
-                        cols_b, total = _emit_all_rows_batch(
-                            key_vals, los, his, arrs, syms
-                        )
-                        frame = _frame_from_batch(cols_b, total)
-                    if frame is not None:
-                        return frame
-                    for lo, hi in spans:
-                        match_no += 1
-                        _emit_all_rows(
-                            match_no,
-                            [(i, name_by_char[syms[i]]) for i in range(lo, hi)],
-                        )
-            else:
-                spans = list(host_matches())
-                if spans:
-                    frame = None
-                    if _batch_aggs_exact(arrs):
-                        los = np.fromiter(
-                            (s[0] for s in spans),
-                            dtype=np.int64,
-                            count=len(spans),
-                        )
-                        his = np.fromiter(
-                            (s[1] for s in spans),
-                            dtype=np.int64,
-                            count=len(spans),
-                        )
+                    n_matched = sum(hi_ - lo_ for lo_, hi_, _ in matches)
+                    vectorize = (
+                        n_matched >= _ALL_ROWS_BATCH_MIN
+                        and _all_rows_batch_exact(arrs)
+                    )
+                else:
+                    vectorize = _batch_aggs_exact(arrs)
+                if vectorize:
+                    m = len(matches)
+                    los = np.fromiter((s[0] for s in matches), np.int64, m)
+                    his = np.fromiter((s[1] for s in matches), np.int64, m)
+                    if all_rows:
                         frame = _frame_from_batch(
-                            _emit_batch(key_vals, los, his, arrs, syms),
-                            len(spans),
+                            *_emit_all_rows_batch(key_vals, los, his, arrs, syms)
+                        )
+                    else:
+                        frame = _frame_from_batch(
+                            _emit_batch(key_vals, los, his, arrs, syms), m
                         )
                     if frame is not None:
                         return frame
-                    for match_no, (lo, hi) in enumerate(spans, 1):
-                        rows.append(
-                            _emit(key_vals, match_no, lo, hi, arrs, syms=syms)
-                        )
         else:
+            syms = None
 
             def can_consume(sym, i, trail):
                 if sym in bools:
@@ -1333,48 +1318,17 @@ def match_recognize(
                     masks[0] if len(masks) == 1 else np.logical_or.reduce(masks)
                 )
 
-            def nfa_matches():
-                if after_match == "past last row":
-                    yield from nfa.finditer(n, can_consume, start_mask)
-                    return
-                i = 0
-                while i < n:
-                    if start_mask is not None and not start_mask[i]:
-                        i += 1
-                        continue
-                    m = nfa.match_at(i, n, can_consume)
-                    if m is not None and m[0] == i:
-                        m = nfa.match_at(i, n, can_consume, require_consume=True)
-                    if m is None or m[0] == i:
-                        i += 1
-                        continue
-                    yield i, m[0], m[1]
-                    if skip_sym is None:
-                        i += 1
-                    else:
-                        ps = [idx for idx, s in m[1] if s == skip_sym]
-                        if not ps:
-                            raise ValueError(
-                                f"AFTER MATCH SKIP {after_match}: "
-                                f"{skip_sym} absent from match"
-                            )
-                        t = ps[0] if skip_first else ps[-1]
-                        if t == i:
-                            raise ValueError(
-                                f"AFTER MATCH SKIP {after_match} would "
-                                "re-match the same starting row"
-                            )
-                        i = t
-
-            match_no = 0
-            for lo, hi, assignment in nfa_matches():
-                match_no += 1
-                if all_rows:
-                    _emit_all_rows(match_no, assignment)
-                else:
-                    rows.append(
-                        _emit(key_vals, match_no, lo, hi, arrs, assignment=assignment)
-                    )
+            matches, _ = _stable_scan(
+                nfa,
+                n,
+                can_consume,
+                after_match,
+                fe.skip_sym,
+                fe.skip_first,
+                start_mask=start_mask,
+                probe=False,
+            )
+        rows = _match_rows(fe, key_vals, matches, arrs, syms, order_by)
         return _frame_from_rows(rows) if rows else empty_out
 
     # Explicit repartition: AQE would coalesce this tiny shuffle to 1-2
@@ -1390,6 +1344,32 @@ def match_recognize(
     return proj.groupBy(*partition_by).applyInPandas(run, out_schema)
 
 
+def _restart(after_match, skip_sym, skip_first, lo, hi, pairs) -> int:
+    """Row where the scan resumes after the match over rows ``[lo, hi)``
+    — the SQL AFTER MATCH SKIP clause. PAST LAST ROW resumes at ``hi``
+    (non-overlapping), TO NEXT ROW one past the match start
+    (overlapping), TO FIRST/LAST <sym> (``skip_sym`` + ``skip_first``) at
+    that row of the match, read from ``pairs``, the match's ``(row,
+    symbol)`` attribution. Raises the standard's infinite-loop
+    protections: the target symbol is absent from the match, or the
+    target is the match's first row."""
+    if after_match == "past last row":
+        return hi
+    if skip_sym is None:  # to next row
+        return lo + 1
+    ps = [idx for idx, s in pairs if s == skip_sym]
+    if not ps:
+        raise ValueError(
+            f"AFTER MATCH SKIP {after_match}: {skip_sym} absent from match"
+        )
+    t = ps[0] if skip_first else ps[-1]
+    if t == lo:
+        raise ValueError(
+            f"AFTER MATCH SKIP {after_match} would re-match the same starting row"
+        )
+    return t
+
+
 def _stable_scan(
     nfa,
     n: int,
@@ -1398,6 +1378,8 @@ def _stable_scan(
     skip_sym: "str | None" = None,
     skip_first: bool = False,
     start: int = 0,
+    start_mask=None,
+    probe: bool = True,
 ) -> tuple[list[tuple[int, int, list]], int]:
     """Leftmost-greedy matches over a PARTIAL stream prefix: scan like
     ``NFA.finditer`` but stop at the first position whose outcome could
@@ -1409,57 +1391,59 @@ def _stable_scan(
     ...]``) carries symbol attribution for rows classified by CALLABLE
     defines, which have no classifier char.
 
-    ``after_match`` picks the restart policy (the SQL AFTER MATCH SKIP
-    clause, same semantics as the batch kernel's ``nfa_matches``):
-    ``past last row`` restarts at the match end (non-overlapping);
-    ``to next row`` one past the match START (overlapping); ``to
-    first/last <sym>`` at that row of the match (``skip_sym`` +
-    ``skip_first``). The stability argument is unchanged under every
-    mode: the restart position is a deterministic function of a DECIDED
-    match, the scan stops at the first probing position, and every
-    emitted match starts strictly before the returned boundary — so
-    dropping ``rows[:boundary]`` can never re-emit a match, whatever the
-    overlap.
+    ``after_match`` picks the restart policy (``_restart``, shared with
+    the batch kernel's host-regex scan). The stability argument is
+    unchanged under every mode: the restart position is a deterministic
+    function of a DECIDED match, the scan stops at the first probing
+    position, and every emitted match starts strictly before the
+    returned boundary — so dropping ``rows[:boundary]`` can never
+    re-emit a match, whatever the overlap.
 
     ``start`` begins the scan mid-buffer: the streaming kernel retains
     already-consumed HISTORY rows at the buffer front so PREV()
     physical navigation can see across the consumption boundary —
     those rows must never be rescanned (they would re-emit), so the
-    scan starts at the first unconsumed index."""
+    scan starts at the first unconsumed index.
+
+    ``probe=False`` scans a COMPLETE input (the batch kernel): no row
+    can arrive past ``n``, so every match is decided and the boundary is
+    ``n``. ``start_mask`` (bool per row) skips positions where no
+    first-set symbol holds — pure pruning, valid only for non-nullable
+    patterns (``NFA.first_symbols``)."""
     matches: list[tuple[int, int, list]] = []
     i = start
     while i < n:
-        probe = [False]
-        m = nfa.match_at(i, n, can, probe=probe)
+        if start_mask is not None and not start_mask[i]:
+            i += 1
+            continue
+        wanted = [False] if probe else None
+        m = nfa.match_at(i, n, can, probe=wanted)
         if m is not None and m[0] == i:
             # zero-width: the host engine retries non-empty at the same
             # position; the retry's stability matters too
-            m = nfa.match_at(i, n, can, require_consume=True, probe=probe)
-        if probe[0]:
+            m = nfa.match_at(i, n, can, require_consume=True, probe=wanted)
+        if probe and wanted[0]:
             return matches, i
         if m is None or m[0] == i:
             i += 1
             continue
         matches.append((i, m[0], m[1]))
-        if after_match == "past last row":
-            i = m[0]
-        elif skip_sym is None:  # to next row
-            i += 1
-        else:
-            ps = [idx for idx, s in m[1] if s == skip_sym]
-            if not ps:
-                raise ValueError(
-                    f"AFTER MATCH SKIP {after_match}: "
-                    f"{skip_sym} absent from match"
-                )
-            t = ps[0] if skip_first else ps[-1]
-            if t == i:
-                raise ValueError(
-                    f"AFTER MATCH SKIP {after_match} would "
-                    "re-match the same starting row"
-                )
-            i = t
+        i = _restart(after_match, skip_sym, skip_first, i, m[0], m[1])
     return matches, n
+
+
+#: (column types, encode, decode) for streaming-state cells JSON cannot
+#: hold, restored exactly: TIMESTAMP as integer nanoseconds, DATE as its
+#: proleptic ordinal, DECIMAL as its text (never through a float).
+_STATE_CODECS = (
+    (
+        (T.TimestampType, T.TimestampNTZType),
+        lambda v: pd.Timestamp(v).value,
+        pd.Timestamp,
+    ),
+    ((T.DateType,), date.toordinal, date.fromordinal),
+    ((T.DecimalType,), str, Decimal),
+)
 
 
 def match_recognize_stream(
@@ -1479,7 +1463,14 @@ def match_recognize_stream(
     after_match: str = "past last row",
 ):
     """Streaming MATCH_RECOGNIZE: the batch kernel run incrementally over
-    a per-key state buffer (``applyInPandasWithState``).
+    a per-key state buffer (``applyInPandasWithState``). ``define``,
+    ``pattern``, ``measures``, ``subsets``, ``after_match``,
+    ``all_rows`` and ``with_classifier`` mean what they mean for
+    ``match_recognize``: both kernels share the front end that validates
+    them and the measure evaluators. What differs is described here.
+    One difference is a known gap: a row satisfying several COLUMN
+    defines takes the first of them in ``define`` order (its classifier
+    char), where the batch kernel lets the pattern position decide.
 
     Each micro-batch appends its (ordered) rows to the key's unconsumed
     tail and runs a STABILITY-AWARE scan (``_stable_scan``): a match is
@@ -1499,16 +1490,10 @@ def match_recognize_stream(
     arrives, a stream that can go quiet forever. The buffer is capped
     at ``max_buffer`` unconsumed rows per key (oldest dropped) so state
     stays bounded — the streaming analog of Beam's NFA state in
-    ``BeamMatchRel``.
-
-    ``after_match`` is the SQL AFTER MATCH SKIP clause, with the SAME
-    surface as the batch kernel: ``"past last row"`` (default,
-    non-overlapping), ``"to next row"`` (overlapping matches — restart
-    one past each match start), ``"to first <sym>"`` / ``"to last
-    <sym>"``. Overlap is sound incrementally because the restart
-    position depends only on a DECIDED (stability-probed) match and
-    every emitted match starts strictly before the consumed boundary,
-    so dropped state can never re-emit — see ``_stable_scan``.
+    ``BeamMatchRel``. Overlapping AFTER MATCH SKIP modes stay sound
+    incrementally: the restart position depends only on a DECIDED match
+    and every emitted match starts strictly before the consumed
+    boundary, so dropped state can never re-emit.
 
     ``event_time=True`` makes the kernel watermark-correct for
     OUT-OF-ORDER arrival (Beam's BeamMatchRel / Flink CEP event-time
@@ -1548,25 +1533,14 @@ def match_recognize_stream(
     contract, so ties within it are fully buffered and their order
     deterministic whatever the arrival order; tie-breaker columns stay
     measurable (only the ts column itself is held as integer
-    microseconds). Measures reference the same C-level str scan as the
-    batch kernel.
-    ``with_classifier=True`` appends a ``classifier`` column holding
-    the LAST matched row's symbol name (the SQL standard's
-    CLASSIFIER() under ONE ROW PER MATCH — same contract as the batch
-    kernel), derived from the decided match's NFA assignment, so it is
-    exact for callable-define symbols too.
+    microseconds).
 
-    Like the batch kernel, ``define`` values may be CALLABLES
-    ``fn(arrs, i, bindings) -> bool`` for match-state-dependent
-    predicates (``B AS B.price < LAST(A.price)`` chains — Flink CEP's
-    IterativeCondition analog): ``arrs`` maps column name -> list of
+    Callable ``define`` values see ``arrs`` as column name -> list of
     the key's buffered values (``predicate_cols`` declares any columns
-    the callables need beyond the measure columns), ``i`` is the row
-    under test, ``bindings`` the partial match. Column defines still
-    classify JVM-side; only callable symbols pay a per-transition
-    Python call, and the stability probe / decided-prefix drop are
-    unchanged. In event-time mode callables see ``order_by`` as integer
-    microseconds (the state encoding).
+    the callables need beyond the measure columns); column defines still
+    classify JVM-side, and only callable symbols pay a per-transition
+    Python call. In event-time mode callables see ``order_by`` as
+    integer microseconds (the state encoding).
     """
     import json
 
@@ -1593,46 +1567,10 @@ def match_recognize_stream(
     et_tie_cols = order_cols[1:] if event_time else []
     order_by = order_cols[0]
 
-    if not define:
-        raise ValueError("define must not be empty")
-    # AFTER MATCH SKIP modes (same surface as the batch kernel): the
-    # restart position is a deterministic function of a DECIDED match,
-    # so the stability probe carries over unchanged — see _stable_scan.
-    skip_sym: "str | None" = None
-    skip_first = False
-    m_skip = re.match(r"to (first|last) (\w+)$", after_match)
-    if m_skip:
-        skip_first = m_skip.group(1) == "first"
-        skip_sym = m_skip.group(2)
-        if skip_sym not in define:
-            raise ValueError(f"AFTER MATCH SKIP target {skip_sym!r} not in define")
-    elif after_match not in ("past last row", "to next row"):
-        raise ValueError(f"unsupported AFTER MATCH SKIP mode {after_match!r}")
-    subsets = subsets or {}
-    for uname, members in subsets.items():
-        if uname in define:
-            raise ValueError(f"SUBSET name {uname!r} collides with a DEFINE symbol")
-        bad = [m for m in members if m not in define]
-        if bad:
-            raise ValueError(f"SUBSET {uname!r} members {bad} not in define")
-    measures = {
-        name: _norm_spec(
-            name,
-            (
-                spec[0],
-                frozenset(subsets[spec[1]])
-                if isinstance(spec[1], str) and spec[1] in subsets
-                else spec[1],
-                *spec[2:],
-            ),
-        )
-        for name, spec in measures.items()
-    }
-    from .nfa import NFA, trail_bindings
-
-    sym_chars = _sym_chars(define)
-    rx = _compile_pattern(pattern, sym_chars)
-    if _ends_extendable(rx.pattern):
+    fe, classifier = _compile(
+        define, pattern, measures, after_match, all_rows, subsets, with_classifier
+    )
+    if _ends_extendable(fe.rx.pattern):
         raise ValueError(
             "streaming pattern must end with a non-extendable position "
             "(a trailing quantifier — even inside a group alternative or "
@@ -1640,10 +1578,7 @@ def match_recognize_stream(
             "batch, so matches would be held until a later symbol "
             "arrives)"
         )
-    nfa = NFA(pattern)
-
-    col_defines = {n: d for n, d in define.items() if isinstance(d, Column)}
-    fn_defines = {n: d for n, d in define.items() if not isinstance(d, Column)}
+    nfa, sym_chars, fn_defines = fe.nfa, fe.sym_chars, fe.fn_defines
     # PREV()/NEXT() physical navigation (compile_condition exposes the
     # worst-case excursions): retain max_prev consumed rows as history so
     # PREV sees across the consumption boundary, and hold back max_next
@@ -1655,13 +1590,7 @@ def match_recognize_stream(
         (getattr(d, "max_next", 0) for d in fn_defines.values()), default=0
     )
 
-    classifier: Column = F.lit(".")
-    for name in reversed(list(col_defines)):
-        classifier = F.when(col_defines[name], F.lit(sym_chars[name])).otherwise(
-            classifier
-        )
-
-    measure_cols = sorted({spec[2] for spec in measures.values() if spec[2]})
+    measure_cols = fe.measure_cols
     keep = list(
         dict.fromkeys(
             [*part_cols, *order_cols, *measure_cols, *(predicate_cols or [])]
@@ -1675,52 +1604,9 @@ def match_recognize_stream(
     proj = df.select(*keep, classifier.alias("__sym"))
     if event_time:
         proj = proj.withWatermark(order_by, watermark_delay)
-    part_fields = [proj.schema[c] for c in part_cols]
-
-    def _measure_field(name: str, spec: tuple) -> T.StructField:
-        if spec[0] == "count":
-            return T.StructField(name, T.LongType())
-        if spec[0] == "avg":
-            return T.StructField(name, T.DoubleType())
-        return T.StructField(name, proj.schema[spec[2]].dataType)
-
-    if all_rows and with_classifier:
-        raise ValueError(
-            "with_classifier applies to ONE ROW PER MATCH only "
-            "(ALL ROWS already emits a per-row classifier column)"
-        )
-    if all_rows:
-        # decided streaming matches are FINAL (the stability probe), so
-        # per-row emission is sound: one output row per matched input
-        # row, with RUNNING/FINAL measures from the shared scanner —
-        # the same contract as the batch kernel's ALL ROWS mode
-        out_schema = T.StructType(
-            [*part_fields]
-            + [
-                T.StructField("match_number", T.LongType()),
-                T.StructField("classifier", T.StringType()),
-            ]
-            + [proj.schema[c] for c in order_cols]
-            + [_measure_field(n, s) for n, s in measures.items()]
-        )
-    else:
-        out_schema = T.StructType(
-            [*part_fields, T.StructField("match_number", T.LongType())]
-            + (
-                [T.StructField("classifier", T.StringType())]
-                if with_classifier
-                else []
-            )
-            + [_measure_field(n, s) for n, s in measures.items()]
-        )
+    out_schema = fe.output_schema(proj.schema, part_cols, order_cols)
     out_cols = [f.name for f in out_schema.fields]
-    # CLASSIFIER() under ONE ROW PER MATCH = the LAST matched row's
-    # symbol NAME (same contract as the batch kernel): invert the
-    # classifier-char table for column-define rows; callable-define
-    # rows get their name from the NFA assignment instead.
-    name_by_char = {c: n for n, c in sym_chars.items()}
     state_schema = T.StructType([T.StructField("blob", T.StringType())])
-    specs = list(measures.values())
     data_cols = [c for c in keep if c not in part_cols]
     # static column->state-slot map (shared by the scan, measures, and
     # the sort). Multi-order rows store every column ONCE in the data
@@ -1735,9 +1621,40 @@ def match_recognize_stream(
             col_idx[_c] = 2 + _i
     # event-time tie-breaker slots (empty unless compound event-time)
     _tie_slots = [col_idx[c] for c in et_tie_cols]
+    # slot -> (encode, decode) for cells JSON cannot hold (the event-time
+    # ts slot is already integer microseconds); other slots are stored
+    # as they arrive
+    codecs = {}
+    for c, ci in col_idx.items():
+        dt = proj.schema[c].dataType
+        for types, enc, dec in _STATE_CODECS:
+            if isinstance(dt, types) and not (event_time and c == order_by):
+                codecs[ci] = (enc, dec)
+    lk_slots = _order_slots if multi_order else [0]
+
+    def _recode(rows, lk, way):
+        """Encode (``way=0``) or decode (``way=1``) the ``codecs`` slots
+        of state ``rows`` in place; returns the last-consumed sort key
+        ``lk`` recoded the same way."""
+        for r in rows:
+            for ci, cd in codecs.items():
+                v = r[ci]
+                r[ci] = None if v is None or v != v else cd[way](v)
+        if lk is None:
+            return None
+        ks = list(lk) if multi_order else [lk]
+        for j, s in enumerate(lk_slots):
+            if s in codecs and ks[j] is not None:
+                ks[j] = codecs[s][way](ks[j])
+        return ks if multi_order else ks[0]
+
+    def _views(rows):
+        return {c: [r[ci] for r in rows] for c, ci in col_idx.items()}
 
     def fn(key, pdfs, state):
         blob = json.loads(state.get[0]) if state.exists else {"rows": [], "mn": 0}
+        if codecs:
+            blob["lk"] = _recode(blob["rows"], blob.get("lk"), 1)
         rows = blob["rows"]  # [order_val, sym, *data_cols-values]
         # h = retained HISTORY rows at the buffer front: already consumed
         # (never rescanned), kept only so PREV() physical navigation can
@@ -1818,11 +1735,8 @@ def match_recognize_stream(
             n_scan -= max_next
         n_scan = max(n_scan, h)
         syms = "".join(r[1] for r in rows)
-        out = []
-        if fn_defines or all_rows:
-            # buffered column views for match-state-dependent callables
-            # (and for the all-rows running-measure scanner)
-            arrs = {c: [r[ci] for r in rows] for c, ci in col_idx.items()}
+        # buffered column views for match-state-dependent callables
+        arrs = _views(rows) if fn_defines else None
 
         def can(sym, i, trail, s=syms):
             if sym in fn_defines:
@@ -1830,145 +1744,14 @@ def match_recognize_stream(
             return s[i] == sym_chars[sym]
 
         decided, consumed = _stable_scan(
-            nfa, n_scan, can, after_match, skip_sym, skip_first, start=h
+            nfa, n_scan, can, after_match, fe.skip_sym, fe.skip_first, start=h
         )
-        for lo, hi, assignment in decided:
-            blob["mn"] += 1
-            if all_rows:
-                if fn_defines:
-                    pairs = sorted(assignment)
-                else:
-                    pairs = [
-                        (i, name_by_char[syms[i]]) for i in range(lo, hi)
-                    ]
-                mvals = _running_measure_values(specs, arrs, pairs)
-                for pos, (idx, sname) in enumerate(pairs):
-                    # col_idx maps every order column in every layout
-                    # (slot 0 for the single/event-time primary)
-                    ovals = [rows[idx][col_idx[c]] for c in order_cols]
-                    out.append(
-                        [*key, blob["mn"], sname, *ovals]
-                        + [mv[pos] for mv in mvals]
-                    )
-                continue
-            if fn_defines:
-                # rows taken by callable symbols carry no classifier
-                # char — symbol attribution must come from the NFA's
-                # assignment (same contract as the batch NFA path)
-                pos_by_sym: dict[str, list[int]] = {}
-                for idx, s in assignment:
-                    pos_by_sym.setdefault(s, []).append(idx)
-            else:
-                pos_by_sym = None
-            vals = []
-            for spec in specs:
-                kind, sym, col, off, _mode = spec
-                if (
-                    kind in ("sum", "avg", "min", "max")
-                    or isinstance(sym, frozenset)
-                    or off
-                    or pos_by_sym is not None
-                ):
-                    # generic path: SUBSET union symbols / aggregates /
-                    # logical-offset navigation / callable-define
-                    # attribution (same contract as the batch kernel's
-                    # _span_idxs)
-                    if pos_by_sym is not None and sym is not None:
-                        names = (sym,) if isinstance(sym, str) else sym
-                        idxs = sorted(
-                            i
-                            for s2 in names
-                            for i in pos_by_sym.get(s2, ())
-                        )
-                    else:
-                        chars = (
-                            None
-                            if sym is None
-                            else {
-                                sym_chars[s]
-                                for s in ((sym,) if isinstance(sym, str) else sym)
-                            }
-                        )
-                        idxs = [
-                            i
-                            for i in range(lo, hi)
-                            if chars is None or syms[i] in chars
-                        ]
-                    if kind == "count":
-                        if col is None:
-                            vals.append(len(idxs))
-                        else:
-                            ci = col_idx[col]
-                            vals.append(
-                                sum(
-                                    1
-                                    for i in idxs
-                                    if rows[i][ci] is not None
-                                    and rows[i][ci] == rows[i][ci]
-                                )
-                            )
-                        continue
-                    if kind in ("first", "last"):
-                        if len(idxs) <= off:
-                            i = -1
-                        else:
-                            i = idxs[off] if kind == "first" else idxs[-1 - off]
-                        vals.append(rows[i][col_idx[col]] if i >= 0 else None)
-                        continue
-                    ci = col_idx[col]
-                    xs = [
-                        rows[i][ci]
-                        for i in idxs
-                        if rows[i][ci] is not None and rows[i][ci] == rows[i][ci]
-                    ]
-                    if not xs:
-                        vals.append(None)
-                    elif kind == "sum":
-                        vals.append(sum(xs))
-                    elif kind == "avg":
-                        vals.append(float(sum(xs)) / len(xs))
-                    elif kind == "min":
-                        vals.append(min(xs))
-                    else:
-                        vals.append(max(xs))
-                    continue
-                if kind == "count":
-                    if col is not None:
-                        # COUNT(Sym.col): non-null col values on Sym's rows
-                        ch = sym_chars[sym] if sym is not None else None
-                        ci = col_idx[col]
-                        # state rows come via itertuples: missing floats
-                        # are NaN, not None — treat both as null
-                        vals.append(
-                            sum(
-                                1
-                                for i in range(lo, hi)
-                                if (ch is None or syms[i] == ch)
-                                and rows[i][ci] is not None
-                                and rows[i][ci] == rows[i][ci]
-                            )
-                        )
-                    else:
-                        vals.append(
-                            hi - lo
-                            if sym is None
-                            else syms.count(sym_chars[sym], lo, hi)
-                        )
-                    continue
-                if kind == "first":
-                    i = lo if sym is None else syms.find(sym_chars[sym], lo, hi)
-                elif kind == "last":
-                    i = hi - 1 if sym is None else syms.rfind(sym_chars[sym], lo, hi)
-                else:
-                    raise ValueError(f"unknown measure kind {kind!r}")
-                vals.append(rows[i][col_idx[col]] if i >= 0 else None)
-            if with_classifier:
-                if pos_by_sym is not None:
-                    last_sym = max(assignment, key=lambda p: p[0])[1]
-                else:
-                    last_sym = name_by_char[syms[hi - 1]]
-                vals.insert(0, last_sym)
-            out.append([*key, blob["mn"], *vals])
+        if decided and not fn_defines:
+            arrs = _views(rows)  # for the measure evaluators
+            # no callable symbols: classifier chars attribute every row
+            decided = [(lo, hi, None) for lo, hi, _ in decided]
+        out = _match_rows(fe, key, decided, arrs, syms, order_cols, blob["mn"])
+        blob["mn"] += len(decided)
         if not event_time and consumed > 0:
             last = rows[consumed - 1]
             blob["lk"] = (
@@ -1982,6 +1765,8 @@ def match_recognize_stream(
             rows = rows[cut:]
             blob["h"] = max(0, blob["h"] - cut)
         blob["rows"] = rows
+        if codecs:
+            blob["lk"] = _recode(rows, blob.get("lk"), 0)
         state.update((json.dumps(blob),))
         if out:
             res = pd.DataFrame(out, columns=out_cols)

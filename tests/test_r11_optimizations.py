@@ -1,6 +1,7 @@
 """Focused tests for the round-11 optimization changes: subtree
-materialization (materialize_once), the mapInArrow Gram-matrix kernel,
-and the CEP numpy-ordering fast path with its pandas fallback."""
+materialization (materialize_once) and the mapInArrow Gram-matrix
+kernel. The CEP ordering and frame-construction tests live in
+test_cep.py."""
 
 from pyspark.sql import functions as F
 
@@ -81,112 +82,6 @@ def test_gram_kernel_matches_explode_formulation(spark):
     assert sorted((r.i, r.j, r.n, r.sxy) for r in got) == sorted(
         (r.i, r.j, r.n, r.sxy) for r in ref
     )
-
-
-def test_cep_numpy_order_matches_and_fallback_engages(spark):
-    """The numpy argsort/lexsort ordering must agree with the old pandas
-    sort_values (ties keep input order — both stable), and order columns
-    numpy cannot compare (None in object arrays) must fall back instead
-    of crashing."""
-    from incubator_beam_spark.plans.cep import match_recognize
-
-    rows = [
-        # user 1: S C C P with an order tie on (grp) broken by arrival
-        (1, 10, "signup", "a"),
-        (1, 11, "click", "a"),
-        (1, 12, "click", "a"),
-        (1, 13, "purchase", "a"),
-        # user 2: no match at all (exercises the reused empty frame)
-        (2, 20, "click", "b"),
-        (2, 21, "click", "b"),
-    ]
-    ev = spark.createDataFrame(
-        rows, "user_id long, event_id long, event_type string, tag string"
-    )
-    out = match_recognize(
-        ev,
-        partition_by=["user_id"],
-        order_by=["event_id"],
-        define={
-            "S": F.col("event_type") == "signup",
-            "C": F.col("event_type") == "click",
-            "P": F.col("event_type") == "purchase",
-        },
-        pattern="S C{1,4} P",
-        measures={"n": ("count", None), "last_c": ("last", "C", "event_id")},
-    ).collect()
-    assert [(r.user_id, r.n, r.last_c) for r in out] == [(1, 4, 12)]
-
-    # two-column ORDER BY exercises np.lexsort
-    out2 = match_recognize(
-        ev,
-        partition_by=["user_id"],
-        order_by=["tag", "event_id"],
-        define={
-            "S": F.col("event_type") == "signup",
-            "C": F.col("event_type") == "click",
-            "P": F.col("event_type") == "purchase",
-        },
-        pattern="S C{1,4} P",
-        measures={"n": ("count", None)},
-    ).collect()
-    assert [(r.user_id, r.n) for r in out2] == [(1, 4)]
-
-
-def test_cep_fast_frame_construction_types(spark):
-    """The column-oriented output construction must round-trip every
-    column kind the serializer treats specially: timestamps (object
-    dtype breaks its TimestampType converter — must go through datetime
-    inference), nullable ints (None in first/last measures), strings,
-    and doubles — in both one-row and ALL ROWS modes."""
-    from incubator_beam_spark.plans.cep import match_recognize
-
-    rows = [
-        (1, 1, "a", "2024-01-01 00:00:01", 10.5, "x"),
-        (1, 2, "b", "2024-01-01 00:00:02", None, None),
-        (1, 3, "c", "2024-01-01 00:00:03", 30.5, "z"),
-        (2, 4, "a", "2024-01-01 00:00:04", 1.0, "w"),
-    ]
-    ev = spark.createDataFrame(
-        rows, "k long, eid long, et string, ts string, v double, s string"
-    ).selectExpr("k", "eid", "et", "CAST(ts AS TIMESTAMP) AS ts", "v", "s")
-    define = {
-        "A": F.col("et") == "a",
-        "B": F.col("et") == "b",
-        "C": F.col("et") == "c",
-    }
-    out = match_recognize(
-        ev,
-        partition_by=["k"],
-        order_by=["eid"],
-        define=define,
-        pattern="A B C",
-        measures={
-            "first_ts": ("first", "A", "ts"),
-            "b_v": ("last", "B", "v"),
-            "b_s": ("last", "B", "s"),
-            "sum_v": ("sum", None, "v"),
-            "n": ("count", None),
-        },
-    ).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r.k, r.match_number, r.n) == (1, 1, 3)
-    assert r.first_ts.isoformat() == "2024-01-01T00:00:01"
-    assert r.b_v is None and r.b_s is None and r.sum_v == 41.0
-
-    out2 = match_recognize(
-        ev,
-        partition_by=["k"],
-        order_by=["ts"],  # timestamp ORDER BY rides the all-rows output
-        define=define,
-        pattern="A B C",
-        measures={"rn": ("count", None)},
-        all_rows=True,
-    ).collect()
-    assert [(r.k, r.classifier, r.ts.second, r.rn) for r in out2] == [
-        (1, "A", 1, 1), (1, "B", 2, 2), (1, "C", 3, 3)
-    ]
 
 
 def test_simhash_table_bit_identical_to_hof(spark):

@@ -1,7 +1,7 @@
 """Focused tests for the round-12 optimization changes and the round-11
 advice fixes: the Gram kernel's empty/null-embedding handling, the
-simhash_table bits guard, the incremental BPE merge learner, and the
-vectorized CEP measure emission."""
+simhash_table bits guard and the incremental BPE merge learner. The
+vectorized CEP measure emission tests live in test_cep.py."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -130,97 +130,6 @@ def test_bpe_incremental_merge_sequence_and_job_count(spark):
     assert n1 - n0 <= k + 2, f"bpe_learn({k}) ran {n1 - n0} jobs (> {k + 2})"
 
 
-def _mr_collect(spark, rows_in, measures):
-    from incubator_beam_spark.plans.cep import match_recognize
-
-    df = spark.createDataFrame(
-        rows_in, "k string, seq long, val double, ts timestamp, tag string"
-    )
-    out = match_recognize(
-        df,
-        partition_by=["k"],
-        order_by=["seq"],
-        pattern="D+ U?",
-        define={
-            "D": F.col("val") < 0,
-            "U": F.col("val") > 0,
-        },
-        measures=measures,
-        after_match="past last row",
-        subsets={"W": ["D", "U"]},
-    )
-    return sorted(
-        tuple(r) for r in out.collect()
-    )
-
-
-def test_cep_batch_emit_matches_row_emit(spark):
-    """VERDICT r11 item 5: ONE ROW PER MATCH fast-path measures are now
-    emitted for all matches of a key at once (prefix-count/reduceat
-    vectorization). A float SUM measure is outside the batch engine's
-    exactness envelope, so adding one forces the whole key back to the
-    per-match ``_emit`` loop — running the same data both ways and
-    comparing the SHARED columns pins batch == row-path semantics,
-    including logical offsets, NULL-skipping counts/aggregates,
-    zero-occurrence symbols (optional U), and timestamp MIN/MAX."""
-    import datetime as dt
-
-    def T(s):
-        return dt.datetime(2024, 1, 1, 0, 0, s)
-
-    rows = [
-        # key a: two matches: [D D D U], [D] (value NULLs inside)
-        ("a", 1, -1.0, T(1), "x"),
-        ("a", 2, -2.0, T(2), None),
-        ("a", 3, -3.0, T(3), "y"),
-        ("a", 4, 5.0, T(4), "z"),
-        ("a", 5, 0.0, T(5), "w"),  # neither D nor U: splits matches
-        ("a", 6, -7.0, T(6), None),
-        # key b: one match, no U row (optional symbol absent)
-        ("b", 1, -4.0, T(7), "p"),
-        ("b", 2, -6.0, T(8), "q"),
-    ]
-    shared = {
-        "n_rows": ("count", None),
-        "n_d": ("count", "D"),
-        "n_tag_d": ("count", "D", "tag"),
-        "first_d": ("first", "D", "seq"),
-        "second_d": ("first", "D", "seq", 1),
-        "second_last_d": ("last", "D", "seq", 1),
-        "first_u": ("first", "U", "seq"),
-        "min_ts": ("min", "W", "ts"),
-        "max_ts": ("max", "D", "ts"),
-        "sum_seq_d": ("sum", "D", "seq"),
-        "avg_seq_d": ("avg", "D", "seq"),
-    }
-    batch = _mr_collect(spark, rows, shared)
-    # float SUM -> _batch_aggs_exact False -> per-match _emit loop
-    row_path = _mr_collect(
-        spark, rows, {**shared, "float_sum": ("sum", "D", "val")}
-    )
-    assert [t[: 2 + len(shared)] for t in row_path] == batch
-    # pin a few hand-computed cells: key a match 1 = rows 1-4 (D D D U)
-    a1 = [t for t in batch if t[0] == "a" and t[1] == 1][0]
-    assert a1[2:] == (
-        4,  # n_rows
-        3,  # n_d
-        2,  # n_tag_d (tag NULL on seq 2)
-        1,  # first_d
-        2,  # second_d
-        2,  # second_last_d
-        4,  # first_u
-        T(1),  # min_ts over D|U
-        T(3),  # max_ts over D
-        6,  # sum_seq_d
-        2.0,  # avg_seq_d
-    )
-    # key b: U absent -> first_u None; single-row second match on key a
-    b1 = [t for t in batch if t[0] == "b"][0]
-    assert b1[8] is None and b1[2:5] == (2, 2, 2)
-    a2 = [t for t in batch if t[0] == "a" and t[1] == 2][0]
-    assert a2[6] is None and a2[7] is None  # offsets beyond 1-row match
-
-
 def test_simhash_table_rejects_bits_over_32(spark):
     """ADVICE r11: bits > 32 silently diverged from simhash64 (int32
     shifts past the operand width are undefined) — must raise."""
@@ -231,116 +140,6 @@ def test_simhash_table_rejects_bits_over_32(spark):
         simhash_table(docs, bits=33)
     with pytest.raises(ValueError, match="32 bits"):
         simhash_table(docs, bits=0)
-
-
-def _mr_all_rows_collect(spark, rows_in, measures):
-    from incubator_beam_spark.plans.cep import match_recognize
-
-    df = spark.createDataFrame(
-        rows_in, "k string, seq long, val double, ts timestamp, tag string"
-    )
-    out = match_recognize(
-        df,
-        partition_by=["k"],
-        order_by=["seq"],
-        pattern="D+ U?",
-        define={
-            "D": F.col("val") < 0,
-            "U": F.col("val") > 0,
-        },
-        measures=measures,
-        after_match="past last row",
-        subsets={"W": ["D", "U"]},
-        all_rows=True,
-    )
-    return sorted(tuple(r) for r in out.collect())
-
-
-def test_cep_all_rows_batch_emit_matches_row_emit(spark):
-    """VERDICT r11 item 5, second half: ALL ROWS PER MATCH fast-path
-    measures are now emitted for all matched rows of a key at once
-    (global prefix scans minus the per-match offset). A float RUNNING
-    SUM is outside the batch engine's exactness envelope, so adding one
-    forces the whole key back to the per-match ``_emit_all_rows`` loop —
-    running the same data both ways and comparing the SHARED columns
-    pins batch == row-path semantics: RUNNING vs FINAL modes, NULL-
-    skipping counts/aggregates, subset symbols, zero-occurrence
-    symbols, and timestamp-typed FINAL MIN."""
-    import datetime as dt
-
-    def T(s):
-        return dt.datetime(2024, 1, 1, 0, 0, s)
-
-    rows = [
-        # key a: matches [D D D U] then [D]; tag NULL on seq 2/6
-        ("a", 1, -1.0, T(1), "x"),
-        ("a", 2, -2.0, T(2), None),
-        ("a", 3, -3.0, T(3), "y"),
-        ("a", 4, 5.0, T(4), "z"),
-        ("a", 5, 0.0, T(5), "w"),  # neither D nor U: splits matches
-        ("a", 6, -7.0, T(6), None),
-        # key b: one match, no U row (optional symbol absent)
-        ("b", 1, -4.0, T(7), "p"),
-        ("b", 2, -6.0, T(8), "q"),
-    ]
-    shared = {
-        "rc": ("count", None),
-        "rc_d": ("count", "D"),
-        "rc_tag_d": ("count", "D", "tag"),
-        "fc_d": ("count", "D", "final"),
-        "rf_d": ("first", "D", "seq"),
-        "rl_d": ("last", "D", "seq"),
-        "ff_d": ("first", "D", "seq", "final"),
-        "fl_w": ("last", "W", "seq", "final"),
-        "rs_d": ("sum", "D", "seq"),
-        "ra_d": ("avg", "D", "seq"),
-        "fs_d": ("sum", "D", "seq", "final"),
-        "fmin_ts": ("min", "W", "ts", "final"),
-        "fmax_d": ("max", "D", "seq", "final"),
-        "rf_u": ("first", "U", "seq"),
-    }
-    batch = _mr_all_rows_collect(spark, rows, shared)
-    row_path = _mr_all_rows_collect(
-        spark, rows, {**shared, "float_rsum": ("sum", "D", "val")}
-    )
-    # output = (k, match_number, classifier, seq, *measures)
-    assert [t[: 4 + len(shared)] for t in row_path] == batch
-    assert len(batch) == 7  # 4 + 1 rows on key a, 2 on key b
-    # Large-key parity: the batch emitter only engages past
-    # _ALL_ROWS_BATCH_MIN matched rows per key, so replicate the block
-    # structure until one key holds 80 matches (320 matched rows) and
-    # compare batch vs the float-forced row path END TO END.
-    big = []
-    for i in range(80):
-        b = 5 * i
-        big += [
-            ("a", b + 1, -1.0, T(1), "x"),
-            ("a", b + 2, -2.0, T(2), None),
-            ("a", b + 3, -3.0, T(3), "y"),
-            ("a", b + 4, 5.0, T(4), "z"),
-            ("a", b + 5, 0.0, T(5), "w"),
-        ]
-    big_batch = _mr_all_rows_collect(spark, big, shared)
-    big_row = _mr_all_rows_collect(
-        spark, big, {**shared, "float_rsum": ("sum", "D", "val")}
-    )
-    assert [t[: 4 + len(shared)] for t in big_row] == big_batch
-    assert len(big_batch) == 320
-    # hand-pinned RUNNING trajectory: key a match 1, rows seq 1..4
-    a1 = [t for t in batch if t[0] == "a" and t[1] == 1]
-    assert [t[4] for t in a1] == [1, 2, 3, 4]  # running COUNT(*)
-    assert [t[5] for t in a1] == [1, 2, 3, 3]  # running COUNT(D.*)
-    assert [t[6] for t in a1] == [1, 1, 2, 2]  # tag NULL on seq 2 skipped
-    assert [t[7] for t in a1] == [3, 3, 3, 3]  # FINAL COUNT(D.*)
-    assert [t[8] for t in a1] == [1, 1, 1, 1]  # running FIRST(D.seq)
-    assert [t[9] for t in a1] == [1, 2, 3, 3]  # running LAST(D.seq)
-    assert [t[12] for t in a1] == [1, 3, 6, 6]  # running SUM(D.seq)
-    assert [t[13] for t in a1] == [1.0, 1.5, 2.0, 2.0]  # running AVG
-    assert [t[15] for t in a1] == [T(1)] * 4  # FINAL MIN(W.ts)
-    # running FIRST(U.seq): NULL until the U row arrives
-    assert [t[17] for t in a1] == [None, None, None, 4]
-    # key b: U never occurs — running FIRST(U.seq) NULL on every row
-    assert all(t[17] is None for t in batch if t[0] == "b")
 
 
 def test_crawl_funnel_plan_stays_deduplicated(spark):
