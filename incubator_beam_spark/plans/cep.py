@@ -225,7 +225,7 @@ def _running_measure_values(specs, arrs, pairs):
     return per_spec
 
 
-def _one_row_values(fe, lo, hi, arrs, syms=None, assignment=None):
+def _one_row_values(fe, lo, hi, arrs, syms, assignment):
     """ONE ROW PER MATCH cells of the match over rows ``[lo, hi)``:
     CLASSIFIER() when ``fe.with_classifier``, then one value per measure
     of ``fe.specs``. ``arrs`` maps column name -> indexable values of the
@@ -1434,7 +1434,8 @@ def _stable_scan(
 
 #: (column types, encode, decode) for streaming-state cells JSON cannot
 #: hold, restored exactly: TIMESTAMP as integer nanoseconds, DATE as its
-#: proleptic ordinal, DECIMAL as its text (never through a float).
+#: proleptic ordinal, DECIMAL as its text (never through a float),
+#: BINARY as hex.
 _STATE_CODECS = (
     (
         (T.TimestampType, T.TimestampNTZType),
@@ -1443,6 +1444,7 @@ _STATE_CODECS = (
     ),
     ((T.DateType,), date.toordinal, date.fromordinal),
     ((T.DecimalType,), str, Decimal),
+    ((T.BinaryType,), lambda v: bytes(v).hex(), bytes.fromhex),
 )
 
 

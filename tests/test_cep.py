@@ -3791,13 +3791,14 @@ def test_match_recognize_stream_rejects_unknown_measure_symbol(spark):
         ("timestamp", "seq"),
         ("date", "seq"),
         ("decimal(10,2)", "seq"),
+        ("binary", "seq"),
         ("timestamp", "x"),  # TIMESTAMP order column, arrival-order mode
     ],
 )
 def test_stream_state_round_trips_non_json_types(spark, sql_type, order_by):
     """Undecided rows carried over a micro-batch boundary keep TIMESTAMP,
-    DATE and DECIMAL cells exactly (measure column or ORDER BY column),
-    and the streamed matches equal the batch kernel's."""
+    DATE, DECIMAL and BINARY cells exactly (measure column or ORDER BY
+    column), and the streamed matches equal the batch kernel's."""
     import datetime as dt
     from decimal import Decimal
 
@@ -3806,6 +3807,8 @@ def test_stream_state_round_trips_non_json_types(spark, sql_type, order_by):
             return dt.datetime(2024, 1, 1, 0, 0, i, 123456)
         if sql_type == "date":
             return dt.date(2024, 1, i)
+        if sql_type == "binary":
+            return bytes([i, 255])
         return Decimal(f"{i}.05")
 
     # key 1: D D | D U (the first two D rows are undecided at the split)

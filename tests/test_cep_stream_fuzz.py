@@ -511,8 +511,8 @@ def test_stream_skip_modes_equal_host_reference(pattern, stream, sizes, mode):
 
 def ref_run_skip(pattern, s, after_match, skip_sym, skip_first):
     """Whole-sequence reference for the skip-mode scan over ANY pattern
-    (nullable included): the batch kernel's ``nfa_matches`` policy with
-    the error cases returned as a flag INSTEAD of raising, so matches
+    (nullable included): the kernels' skip-restart policy (``_restart``)
+    with the error cases returned as a flag INSTEAD of raising, so matches
     decided before the error survive for the prefix comparison (a
     raising scan discards its own decided-so-far list — real kernel
     behavior, useless as an oracle)."""
