@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1103,7 +1104,7 @@ def stream_chained_watermarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(60):
         try:
             n = spark.read.parquet(os.path.join(inter, "data")).count()
-        except Exception:
+        except AnalysisException:  # stage 1 has not written data/ yet
             n = -1
         stable = stable + 1 if n == prev else 0
         prev = n

@@ -633,3 +633,134 @@ def test_watermark_gated_visibility_fuzz(spark, tmp_path, seed):
         f"predicate\nexpected {expected_seq}\ngot {got_seq}"
     )
     assert sum(len(v) for v in got_seq) == n  # exactly once, no loss
+
+
+_FILE_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _stage_max_file(spark, stage, i):
+    """Stage event file ``i`` (0 or 1) for the windowed max. File 1
+    lowers key 1's [0, 10) value, so only a restored state keeps 5.0,
+    and raises key 2's."""
+    from incubator_beam_spark.queries.events import _stage_scripted_file
+
+    rows = [
+        [(_ts(1), 1, 5.0), (_ts(2), 2, 3.0), (_ts(12), 1, 7.0)],
+        [(_ts(3), 1, 4.0), (_ts(4), 2, 9.0), (_ts(13), 3, 1.0)],
+    ][i]
+    df = spark.createDataFrame(rows, EVENT_SCHEMA)
+    _stage_scripted_file(stage, df, f"f{i}", 1700000000 + i)
+
+
+def _drain_windowed_max(spark, stage, ckpt):
+    """Drain an update-mode windowed max over ``stage`` (one file per
+    trigger) into ``ckpt``; return the non-empty batch outputs in order
+    and the batch ids that ran."""
+    out = []
+
+    def handle(batch_df, _epoch):
+        rows = sorted(tuple(r) for r in batch_df.collect())
+        if rows:
+            out.append(rows)
+
+    agg = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "10 minutes"), "user_id")
+        .agg(F.max("value").alias("mx"))
+        .select(F.unix_timestamp("window.start").alias("ws"), "user_id", "mx")
+    )
+    q = (
+        agg.writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch(handle)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return out, sorted({p["batchId"] for p in q.recentProgress})
+
+
+def test_checkpoint_restart_across_file_managers(spark, tmp_path):
+    """A checkpoint written through Spark's FileContext checkpoint manager
+    restarts under the session's FileSystem-based one, and the restarted
+    query's output equals an uninterrupted run's."""
+    import os
+
+    whole, split = str(tmp_path / "whole"), str(tmp_path / "split")
+    os.makedirs(whole)
+    os.makedirs(split)
+    for i in (0, 1):
+        _stage_max_file(spark, whole, i)
+    expected, _ = _drain_windowed_max(spark, whole, str(tmp_path / "ckpt_whole"))
+
+    _stage_max_file(spark, split, 0)
+    default = spark.conf.get(_FILE_MANAGER_KEY)
+    spark.conf.set(
+        _FILE_MANAGER_KEY,
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+    )
+    try:
+        first, _ = _drain_windowed_max(spark, split, str(tmp_path / "ckpt_split"))
+    finally:
+        spark.conf.set(_FILE_MANAGER_KEY, default)
+    _stage_max_file(spark, split, 1)
+    rest, _ = _drain_windowed_max(spark, split, str(tmp_path / "ckpt_split"))
+
+    assert first + rest == expected
+    assert expected[1][0] == (1704067200, 1, 5.0)  # max restored from state
+
+
+def test_local_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """Local sessions resolve the FileSystem-based checkpoint manager, and
+    a stateful drain still writes Spark's checksum file beside every
+    state delta and one offset and one commit entry per batch."""
+    import os
+
+    from incubator_beam_spark.session import CHECKPOINT_FILE_MANAGER
+
+    assert spark.conf.get(_FILE_MANAGER_KEY) == CHECKPOINT_FILE_MANAGER
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == CHECKPOINT_FILE_MANAGER
+
+    stage, ckpt = str(tmp_path / "stage"), str(tmp_path / "ckpt")
+    os.makedirs(stage)
+    for i in (0, 1):
+        _stage_max_file(spark, stage, i)
+    # N.delta files are the HDFS-backed store's layout; transformWithState
+    # gates leave the session on RocksDB
+    provider_key = "spark.sql.streaming.stateStore.providerClass"
+    provider = spark.conf.get(provider_key)
+    spark.conf.set(
+        provider_key,
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    )
+    try:
+        _, batches = _drain_windowed_max(spark, stage, ckpt)
+    finally:
+        spark.conf.set(provider_key, provider)
+    assert len(batches) >= 2
+
+    state = os.path.join(ckpt, "state", "0")
+    deltas = 0
+    for part in os.listdir(state):
+        if not part.isdigit():
+            continue
+        files = set(os.listdir(os.path.join(state, part)))
+        for f in files:
+            if f.endswith(".delta") and not f.startswith("."):
+                deltas += 1
+                assert f + ".crc" in files, f"{part}/{f} has no checksum file"
+    assert deltas > 0
+    for log in ("offsets", "commits"):
+        entries = [f for f in os.listdir(os.path.join(ckpt, log)) if not f.startswith(".")]
+        assert sorted(map(int, entries)) == batches, log
