@@ -18,6 +18,8 @@ negligible at 10^12 docs.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -147,25 +149,29 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     (file listing only — the relation caches it). The old
     ``df.rdd.getNumPartitions()`` probe forced a full DataFrame->RDD plan
     conversion on the driver per call: dead weight, per VERDICT r2.
-    """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        import os as _os
 
-        files = df.inputFiles()
-        if not files:
-            return df
-        total = 0
+    Left as-is: a stream (``inputFiles`` refuses it), a relation backed by
+    no files (memory, range: no input files) and files the local
+    filesystem cannot size (a remote store).
+    """
+    if df.isStreaming:
+        return df
+    files = df.inputFiles()
+    if not files:
+        return df
+    spark = df.sparkSession
+    total = 0
+    try:
         for f in files:
             p = f[7:] if f.startswith("file:") else f
             p = "/" + p.lstrip("/")
-            total += _os.path.getsize(p)
-        mpb = int("".join(ch for ch in spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728b") if ch.isdigit()))
-        est_splits = max(len(files), -(-total // max(mpb, 1)))
-    except Exception:
-        return df  # non-file source (stream, view over memory) — leave as-is
+            total += os.path.getsize(p)
+    except OSError:
+        return df
+    mpb = int("".join(ch for ch in spark.conf.get(
+        "spark.sql.files.maxPartitionBytes", "134217728b") if ch.isdigit()))
+    est_splits = max(len(files), -(-total // max(mpb, 1)))
+    target = spark.sparkContext.defaultParallelism
     if est_splits < target:
         return df.repartition(target)
     return df

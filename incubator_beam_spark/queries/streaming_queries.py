@@ -1213,7 +1213,7 @@ def _tws_host_or_subproc(spark: SparkSession, sf_dir: str, impl_name: str) -> Da
 
 
 def _tws_counter_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.userstate_tws import stateful_pardo_tws
+    from ..streaming.userstate_tws import restore_state_store_provider, stateful_pardo_tws
 
     e = stream_table(spark, sf_dir, "events")
     out_schema = T.StructType(
@@ -1231,18 +1231,12 @@ def _tws_counter_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stateful_pardo_tws flips the session state store to RocksDB (the
     # transformWithState contract); scope the flip to this gate so later
     # queries in the same session keep the session default.
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with restore_state_store_provider(spark):
         out = stateful_pardo_tws(
             e, key_col="user_id", output_schema=out_schema,
             process=process, time_mode="None",
         )
         drained = _drain(out, "append")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     return drained.groupBy("key").agg(F.max("total").alias("total"))
 
 
@@ -1342,7 +1336,7 @@ def stateful_timer_flush_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tws_timer_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.userstate_tws import stateful_pardo_tws
+    from ..streaming.userstate_tws import restore_state_store_provider, stateful_pardo_tws
 
     e = (
         stream_table(spark, sf_dir, "events")
@@ -1376,16 +1370,10 @@ def _tws_timer_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     def on_timer(key, name, ctx):
         return [(int(key), ctx.read("n", 0), ctx.read("sum", 0))]
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with restore_state_store_provider(spark):
         out = stateful_pardo_tws(
             e, key_col="user_id", output_schema=schema,
             process=process, on_timer=on_timer, time_mode="EventTime",
         )
         drained = _drain(out, "append", settle=True)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     return drained

@@ -23,6 +23,19 @@ Settings are chosen for correctness-at-scale first:
   an existing destination first, one through ``getFileLinkStatus``,
   the other through ``fs.exists`` (a ``File.exists``, no fork). Checked
   with ``javap -c`` on the Spark 4.1.2 and Hadoop 3.4.2 jars.
+- Spark's codegen cache holds 1000 entries, not its default 100. The
+  cache maps generated Java source to its Janino-compiled class; it is
+  per JVM, so the driver and every executor keep one. A miss re-runs
+  Janino and loads a fresh copy of the class, which the JIT then
+  compiles again from scratch. One pass of a small query set can
+  generate more than 100 classes: at the default, Spark's
+  ``CodegenMetrics`` compile count rose on every pass of the benchmark's
+  workloads, by 92-114 (sql), 80 (pykernels) and 18-25 (stream),
+  depending on the seed. A pass walks its classes in the same order
+  each time, so an LRU cache smaller than that set evicts every class
+  before its next use and never gets a hit. The cache is Guava's, which
+  splits its capacity over segments and evicts per segment, before the
+  total reaches the limit: stream's 89 classes already missed at 100.
 """
 
 from __future__ import annotations
@@ -47,6 +60,13 @@ def get_spark(app_name: str = "incubator_beam_spark", cpus: int | None = None) -
     On a real cluster the master/memory flags come from spark-submit; every
     ``.config`` here is safe to keep (they are about SQL planning, not
     topology).
+
+    ``spark.sql.codegen.cache.maxEntries`` is a static conf, read once per
+    JVM when the first query generates code, so it only takes effect in a
+    session this builder creates. At Spark's default of 100, a repeated
+    workload whose plans generate more than 100 classes misses on every
+    class (see the module docstring); 1000 keeps about 9x the largest
+    per-pass set measured (114).
     """
     cpus = cpus or DEFAULT_CPUS
     # Must run before the JVM launches: workers inherit PYTHONPATH from the
@@ -67,6 +87,7 @@ def get_spark(app_name: str = "incubator_beam_spark", cpus: int | None = None) -
         # a (microsecond) timestamp column.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         import tempfile

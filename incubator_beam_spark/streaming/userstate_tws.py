@@ -11,7 +11,10 @@ missing (Spark timers are bare timestamps), so a name->instant map in a
 value cell tags each registered instant; everything else is direct.
 
 Requires the RocksDB state store (``transformWithState`` contract); the
-adapter sets the provider conf on the session if unset. TimeMode
+adapter sets the provider conf on the session if unset. The provider is
+read when the query starts, so the flip outlives the builder call: start
+the query inside ``restore_state_store_provider(spark)`` to hand later
+stateful queries the session's own store back. TimeMode
 EventTime requires an upstream ``withWatermark``.
 
 ENVIRONMENT GATE: the engine-side TWS state server speaks protobuf to
@@ -37,10 +40,11 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.stateful_processor import (
@@ -49,6 +53,21 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 _ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+
+
+@contextmanager
+def restore_state_store_provider(spark: SparkSession) -> Iterator[None]:
+    """Put the session's state-store provider conf back as it was on
+    entry (unset again if it was unset), whatever ran inside."""
+    prev = spark.conf.get(_PROVIDER, None)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_PROVIDER)
+        else:
+            spark.conf.set(_PROVIDER, prev)
 
 
 class TwsContext:
@@ -164,7 +183,8 @@ def stateful_pardo_tws(
     primitive. Same contract as ``userstate.stateful_pardo`` (process /
     on_timer emitting tuples for ``output_schema``), but timers are
     engine-managed: no deadline re-arming, per-timer wake-ups, and the
-    state store is RocksDB."""
+    state store is RocksDB. The provider flip stays on the session; see
+    ``restore_state_store_provider``."""
     from incubator_beam_spark import pbshim
 
     if not pbshim.activate():
@@ -174,10 +194,8 @@ def stateful_pardo_tws(
             "use userstate.stateful_pardo (applyInPandasWithState) instead"
         )
     spark = df.sparkSession
-    if "RocksDB" not in (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    ):
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB)
+    if "RocksDB" not in spark.conf.get(_PROVIDER, ""):
+        spark.conf.set(_PROVIDER, _ROCKSDB)
     out_cols = [f.name for f in output_schema.fields]
     return df.groupBy(F.col(key_col)).transformWithStateInPandas(
         _BeamProcessor(process, on_timer, out_cols),

@@ -26,6 +26,26 @@ def dup_docs(spark):
     )
 
 
+def test_ensure_parallelism_leaves_non_file_sources_unchanged(spark, dup_docs, tmp_path):
+    """In-memory and streaming frames, and files that can no longer be
+    sized, come back as they are; a one-file parquet scan is spread over
+    the session's slots."""
+    import os
+
+    assert dedup.ensure_parallelism(dup_docs) is dup_docs
+    stream = spark.readStream.schema(dup_docs.schema).parquet(str(tmp_path))
+    assert dedup.ensure_parallelism(stream) is stream
+
+    path = str(tmp_path / "docs")
+    dup_docs.coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    spread = dedup.ensure_parallelism(scan)
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    for f in os.listdir(path):
+        os.remove(os.path.join(path, f))
+    assert dedup.ensure_parallelism(scan) is scan
+
+
 def test_exact_dedup_groups_identical(spark, dup_docs):
     out = {r.keep_id: r.n_copies for r in dedup.exact_dedup(dup_docs).collect()}
     assert out[1] == 2  # docs 1+2 identical

@@ -370,6 +370,7 @@ def test_stateful_pardo_tws_native_timers(spark):
 
     from incubator_beam_spark.streaming.userstate_tws import (
         TwsContext,
+        restore_state_store_provider,
         stateful_pardo_tws,
     )
 
@@ -395,7 +396,8 @@ def test_stateful_pardo_tws_native_timers(spark):
             ctx.clear("buf")
         return [(int(key), name, len(buf))]
 
-    with TestStream(spark, EVENT_SCHEMA) as ts:
+    # the RocksDB flip must not reach the stateful tests after this one
+    with restore_state_store_provider(spark), TestStream(spark, EVENT_SCHEMA) as ts:
         out = stateful_pardo_tws(
             ts.stream.withWatermark("ts", "1 second"),
             key_col="user_id",
@@ -411,6 +413,28 @@ def test_stateful_pardo_tws_native_timers(spark):
         ts.add_elements([(datetime.datetime(2024, 1, 1, 1), 99, 0.0)]).advance()
         rows = [(r.event, r.n) for r in ts.results().collect() if r.key == 1]
         assert rows == [("flush", 2), ("gc", 2)]
+
+
+def test_restore_state_store_provider_puts_back_set_and_unset(spark):
+    """The scope hands back the provider as it found it: unset stays
+    unset, a set value comes back, also when the body raises."""
+    from incubator_beam_spark.streaming.userstate_tws import (
+        _PROVIDER,
+        _ROCKSDB,
+        restore_state_store_provider,
+    )
+
+    hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    with restore_state_store_provider(spark):
+        spark.conf.unset(_PROVIDER)
+        with restore_state_store_provider(spark):
+            spark.conf.set(_PROVIDER, _ROCKSDB)
+        assert spark.conf.get(_PROVIDER, None) is None
+        spark.conf.set(_PROVIDER, hdfs)
+        with pytest.raises(RuntimeError), restore_state_store_provider(spark):
+            spark.conf.set(_PROVIDER, _ROCKSDB)
+            raise RuntimeError
+        assert spark.conf.get(_PROVIDER) == hdfs
 
 
 def test_stateful_pardo_set_and_combining_cells(spark):
@@ -736,18 +760,9 @@ def test_local_session_checkpoints_through_filesystem_manager(spark, tmp_path):
     os.makedirs(stage)
     for i in (0, 1):
         _stage_max_file(spark, stage, i)
-    # N.delta files are the HDFS-backed store's layout; transformWithState
-    # gates leave the session on RocksDB
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    provider = spark.conf.get(provider_key)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    try:
-        _, batches = _drain_windowed_max(spark, stage, ckpt)
-    finally:
-        spark.conf.set(provider_key, provider)
+    # N.delta files are the layout of the session's default, HDFS-backed,
+    # store: earlier transformWithState tests must have handed it back
+    _, batches = _drain_windowed_max(spark, stage, ckpt)
     assert len(batches) >= 2
 
     state = os.path.join(ckpt, "state", "0")
