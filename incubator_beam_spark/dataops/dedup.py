@@ -192,9 +192,14 @@ def materialize_once(df: DataFrame) -> DataFrame:
     re-evaluated the signature subtree 4-6x per query (0 ReusedExchange
     nodes in the AQE final plan). On a real cluster this is the
     checkpoint-the-signatures pattern; blocks are freed by the next
-    ``clearCache``/unpersist or session end. Lazy (``eager=False``) so
-    query CONSTRUCTION stays cheap — the materialization happens inside
-    the first action, where the bench times it honestly.
+    ``clearCache``/unpersist or session end.
+
+    ``eager=False`` defers less than it says under AQE:
+    ``Dataset.localCheckpoint`` calls ``physicalPlan.execute()``, which
+    runs every shuffle-map stage of the subtree AT ONCE, during query
+    construction (``minhash_lsh_pairs`` launches 2 jobs while it is being
+    built). Only the last stage, the one that computes and stores the
+    blocks, waits for the first action that reads them.
 
     Streaming DataFrames pass through unchanged (checkpointing a
     streaming plan is an analysis error; inside ``foreachBatch`` the
@@ -545,6 +550,16 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 # -- near-dup clustering: connected components over candidate pairs ----------
 
 
+def _oriented_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct non-loop edges as ``(u, v)`` with ``u > v``."""
+    return (
+        edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
+        .distinct()
+    )
+
+
 def _local_contract(e: DataFrame) -> DataFrame:
     """Per-partition local contraction: each task replaces ITS OWN edges
     with the star forest of its local components (node -> min reachable
@@ -593,6 +608,32 @@ def _local_contract(e: DataFrame) -> DataFrame:
     return e.mapInPandas(contract, "u long, v long")
 
 
+def _is_star_forest(e: DataFrame) -> bool:
+    """True when the ``(u, v)`` edges form a star forest: every ``u`` has
+    exactly one edge and no ``v`` is also a ``u``. An empty edge set is
+    one. One aggregate, so one action: it also fills ``e``'s lazy
+    ``localCheckpoint`` blocks when ``e`` has one."""
+    # (n, is_u, is_v) for both ends of every edge, in one scan of e: a
+    # union of two selects reads e twice, in two concurrent tasks
+    ends = e.select(
+        F.inline(F.array(
+            F.struct(F.col("u").alias("n"), F.lit(1).alias("is_u"), F.lit(0).alias("is_v")),
+            F.struct(F.col("v").alias("n"), F.lit(0).alias("is_u"), F.lit(1).alias("is_v")),
+        ))
+    )
+    row = (
+        ends.groupBy("n")
+        .agg(F.sum("is_u").alias("deg"), F.max("is_v").alias("is_v"))
+        .agg(
+            F.max("deg").alias("deg"),
+            # > 0 iff some node is both a u and a v
+            F.max(F.least("deg", "is_v")).alias("mid"),
+        )
+        .collect()[0]
+    )
+    return row.deg is None or (row.deg == 1 and row.mid == 0)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -615,9 +656,14 @@ def connected_components(
     has no CC primitive; this is the composition a Beam user would write
     on top of GroupByKey (SURVEY.md training-data ops).
 
-    Convergence is detected by an (edge-count, xxhash64 checksum)
-    fixpoint — two scalar aggregates per round, no plan-growing
-    ``subtract``.
+    The loop stops as soon as the edge set is a star forest (every ``u``
+    has one edge, no ``v`` is also a ``u``; ``_is_star_forest``), tested
+    once before the first round and once after each. That test is exact:
+    every edge that the orientation, the contraction or a round emits has
+    ``u > v``, so each star's centre is its component's minimum and a
+    star forest is already the final labelling, the fixpoint of
+    large-star/small-star. An input the contraction leaves as stars runs
+    no round at all.
 
     Each round's ``localCheckpoint`` blocks are RELEASED once the next
     round is materialized — otherwise an O(log n)-round run pins every
@@ -639,25 +685,23 @@ def connected_components(
             t = it.next()
             if t._1() in ids:
                 t._2().unpersist(False)
-    e = (
-        edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-        )
-        .distinct()
-    )
+    e = _oriented_edges(edges, src, dst)
     if local_contract:
         e = _local_contract(e)
     # Iterative lineage MUST be truncated per round (localCheckpoint), or
     # Catalyst re-analyzes a plan that doubles every iteration. On a real
     # cluster prefer reliable checkpoint(dir) for executor-loss recovery.
+    # Each checkpoint is lazy: its shuffle-map stages run when it is
+    # taken (AQE, see ``materialize_once``), and the star-forest test
+    # right after it is the action that computes and stores its blocks.
     sc = edges.sparkSession.sparkContext
     before = _persistent_ids(sc)
-    e = e.localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=False)
     live_ids = _persistent_ids(sc) - before
-    prev_sig = None
+    done = _is_star_forest(e)
     for _ in range(max_iter):
+        if done:
+            break
         # large-star: every strictly-larger neighbor of u links to
         # m = min(N(u) + {u}).
         sym = e.unionByName(
@@ -685,25 +729,14 @@ def connected_components(
         sm_self = mins2.select("u", F.col("minv").alias("v"))
         e_new = sm_n.unionByName(sm_self).filter(F.col("u") != F.col("v")).distinct()
         before = _persistent_ids(sc)
-        # LAZY checkpoint: the convergence aggregate right below is an
-        # action anyway, so it materializes the stored blocks AND
-        # computes the fixpoint signature in ONE job — the old eager
-        # checkpoint cost a separate driver-coordinated job per round
-        # (r12; same truncated-lineage semantics either way).
         e_new = e_new.localCheckpoint(eager=False)
         new_ids = _persistent_ids(sc) - before
-        row = e_new.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("sig"),
-        ).collect()[0]
+        done = _is_star_forest(e_new)
         # the previous round's blocks are no longer reachable from e_new
-        # (lineage truncated) — release them now
+        # (stored, lineage truncated) — release them now
         _unpersist(sc, live_ids)
         live_ids = new_ids
         e = e_new
-        if prev_sig == (row.n, row.sig):
-            break
-        prev_sig = (row.n, row.sig)
     labels = e.select(F.col("u").alias(node_col), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias(node_col)).distinct().withColumn(
         "component", F.col(node_col)

@@ -141,3 +141,17 @@ def assert_matches_oracle(spark_df, duck_con, oracle: str, name: str = "query"):
     if s_norm != d_norm:
         diffs = [(a, b) for a, b in zip(s_norm, d_norm) if a != b][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
+
+
+def jobs_launched(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and job count."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-launched-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

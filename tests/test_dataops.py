@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from incubator_beam_spark.dataops import dedup, similarity
 from incubator_beam_spark.dataops.multimodal import decode_images, with_binary_meta
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, jobs_launched
 
 
 @pytest.fixture(scope="module")
@@ -380,10 +380,12 @@ def test_wav_header_codec_roundtrip():
     assert parse_wav_meta(hdr[:20]) is None  # truncated
 
 
-def test_connected_components_vs_union_find(spark):
+@pytest.mark.parametrize("local_contract", [True, False])
+def test_connected_components_vs_union_find(spark, local_contract):
     """CC labels must equal a driver-side union-find on a graph with
     chains (multi-hop), a star, singletons, and duplicate/reversed
-    edges."""
+    edges. Without the contraction the 41-node path takes several real
+    rounds before the edges form a star forest."""
     import random
 
     from incubator_beam_spark.dataops.dedup import connected_components
@@ -419,9 +421,46 @@ def test_connected_components_vs_union_find(spark):
     nodes = spark.createDataFrame([(i,) for i in range(n)], ["node"])
     got = {
         r.node: r.component
-        for r in connected_components(edges, nodes=nodes).collect()
+        for r in connected_components(
+            edges, nodes=nodes, local_contract=local_contract
+        ).collect()
     }
     assert got == expected
+
+
+@pytest.mark.parametrize(
+    "edges, star",
+    [
+        ([], True),  # non-empty stars: see the no-round test below
+        ([(2, 1), (1, 0)], False),  # 2-hop chain: 1 is a v and a u
+        ([(2, 0), (2, 1)], False),  # 2 has two parents
+    ],
+)
+def test_star_forest_check(spark, edges, star):
+    e = spark.createDataFrame(edges, "u long, v long")
+    assert dedup._is_star_forest(e) is star
+
+
+def test_connected_components_runs_no_round_on_contracted_stars(spark):
+    """Five 100-node paths, the ``doc_neardup_clusters`` graph: the local
+    contraction already leaves each path as a star on its minimum, so
+    building the result launches only the pre-loop jobs and one
+    star-forest check, and no large-star/small-star round."""
+    ids = spark.range(500)
+    edges = ids.filter(F.col("id") % 100 != 0).select(
+        F.col("id").alias("src"), (F.col("id") - 1).alias("dst")
+    )
+    _, pre = jobs_launched(
+        spark,
+        lambda: dedup._is_star_forest(
+            dedup._local_contract(dedup._oriented_edges(edges, "src", "dst"))
+            .localCheckpoint(eager=False)
+        ),
+    )
+    out, built = jobs_launched(spark, lambda: dedup.connected_components(edges))
+    assert built <= pre, f"{built} build jobs, pre-loop plus one check is {pre}"
+    got = {r.node: r.component for r in out.collect()}
+    assert got == {i: i - i % 100 for i in range(500)}
 
 
 def test_neardup_dedup_end_to_end(spark):

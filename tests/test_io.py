@@ -404,20 +404,6 @@ def test_python_datasource_stream_replay_is_bit_identical():
 # -- catalog: each path's parquet schema is inferred once --------------------
 
 
-def _jobs_launched(spark, fn):
-    """Run ``fn`` under a fresh job group; return its result and job count."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"catalog-test-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "catalog schema cache test")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _write_region(path, **extra):
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -429,13 +415,13 @@ def _write_region(path, **extra):
 def test_catalog_second_read_launches_no_job(spark):
     from incubator_beam_spark.catalog import table
 
-    from .conftest import SF_DIR
+    from .conftest import SF_DIR, jobs_launched
 
     path = os.path.join(SF_DIR, "lineitem.parquet")
-    _, bare = _jobs_launched(spark, lambda: spark.read.parquet(path))
+    _, bare = jobs_launched(spark, lambda: spark.read.parquet(path))
     assert bare >= 1  # schema inference is a job, so the count below means something
     first = table(spark, SF_DIR, "lineitem")
-    second, jobs = _jobs_launched(spark, lambda: table(spark, SF_DIR, "lineitem"))
+    second, jobs = jobs_launched(spark, lambda: table(spark, SF_DIR, "lineitem"))
     assert jobs == 0
     assert second.schema == first.schema
 
