@@ -738,17 +738,17 @@ def connected_components(
         live_ids = new_ids
         e = e_new
     labels = e.select(F.col("u").alias(node_col), F.col("v").alias("component"))
-    roots = e.select(F.col("v").alias(node_col)).distinct().withColumn(
-        "component", F.col(node_col)
-    )
-    out = labels.unionByName(roots)
+    ids = e.select(F.col("v").alias(node_col))
     if nodes is not None:
-        all_nodes = nodes.select(F.col(node_col).cast("long").alias(node_col)).distinct()
-        singletons = all_nodes.join(out, node_col, "left_anti").withColumn(
-            "component", F.col(node_col)
+        ids = ids.unionByName(
+            nodes.select(F.col(node_col).cast("long").alias(node_col))
         )
-        out = out.unionByName(singletons)
-    return out
+    # A star forest's us and vs are disjoint, so the ids that are no
+    # edge's u are exactly the roots (and the singletons of ``nodes``).
+    # Anti-joining against ``labels``, not the output, plans the output
+    # once: ReuseExchange cannot merge two copies of its ``distinct``.
+    roots = ids.distinct().join(labels.select(node_col), node_col, "left_anti")
+    return labels.unionByName(roots.withColumn("component", F.col(node_col)))
 
 
 def neardup_dedup(

@@ -21,10 +21,13 @@ Spark-first design (not a port of the NFA):
   backtracking NFA (``plans/nfa.py``), the general semantics of the
   reference's ``impl/nfa/NFA.java``, including cross-symbol references
   like ``B AS B.price < LAST(A.price)``.
-- The per-key run is an ``applyInPandas``: one shuffle on the partition
-  keys, Arrow-batched, state-free. At 100 TB the only scale hazard is a
-  single giant key (all rows of one key sit in one task) — same
-  contract as SQL MATCH_RECOGNIZE's PARTITION BY everywhere.
+- The per-key run is an ``applyInArrow``: one shuffle on the partition
+  keys, state-free. Spark ships each key's rows as Arrow and would turn a
+  pandas result straight back into Arrow, so the kernel reads numpy
+  columns off the ``pa.Table`` and returns a ``pa.Table`` of the declared
+  schema; no pandas frame is built per key. At 100 TB the only scale
+  hazard is a single giant key (all rows of one key sit in one task) —
+  same contract as SQL MATCH_RECOGNIZE's PARTITION BY everywhere.
 
 Both kernels — batch ``match_recognize`` and the incremental
 ``match_recognize_stream`` — share one front end (``_compile``: DEFINE /
@@ -57,9 +60,12 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .nfa import _TOKEN, NFA, parse_quant, trail_bindings
 
@@ -129,22 +135,6 @@ def _norm_spec(name: str, spec: tuple) -> tuple:
                 "(mode must be 'running' or 'final')"
             )
     return (kind, sym, col, off, mode)
-
-
-def _np_bool(series: pd.Series) -> "np.ndarray":
-    """Nullable boolean column -> dense bool ndarray with NA/None ->
-    False. Arrow normally hands the kernel plain object dtype, where
-    ``== True`` maps None -> False in one C pass; pandas nullable
-    BooleanDtype would instead yield pd.NA elements from ``==``
-    (truth-ambiguous downstream — ADVICE r6), so it is densified
-    explicitly, and any other exotic dtype falls back to an elementwise
-    is-True pass."""
-    if str(series.dtype) == "boolean":
-        return series.fillna(False).to_numpy(dtype=bool)
-    out = series.to_numpy() == True  # noqa: E712
-    if out.dtype != bool:
-        out = np.fromiter((v is True for v in out), dtype=bool, count=len(out))
-    return out
 
 
 _AGG_KINDS = ("sum", "avg", "min", "max")
@@ -725,7 +715,10 @@ def match_recognize(
     round-2 kernel). Keys where a row satisfies >1 symbol — or any
     callable define — run the real leftmost-greedy backtracking NFA
     (``plans/nfa.py``), matching Calcite's NFA preference order. Both
-    paths share the one-shuffle ``applyInPandas`` shape.
+    paths share the one-shuffle ``applyInArrow`` shape: each key's rows
+    arrive as a ``pa.Table`` and its output leaves as one, since Spark
+    moves both as Arrow and a pandas frame between would only be
+    converted straight back.
 
     ``after_match`` is the SQL-standard AFTER MATCH SKIP clause:
     ``"past last row"`` (default, non-overlapping), ``"to next row"``
@@ -802,7 +795,6 @@ def match_recognize(
     )
 
     out_schema = fe.output_schema(proj.schema, partition_by, order_by)
-    out_cols = [f.name for f in out_schema.fields]
     data_cols = [c for c in base_cols]
 
     def _batch_aggs_exact(arrs) -> bool:
@@ -1085,142 +1077,37 @@ def match_recognize(
             cols.append(out)
         return cols, total
 
-    def _df_from_arrays(arrays, index):
-        """One-block-per-column frame: ``_from_arrays`` consolidates
-        same-dtype columns into 2-D blocks (copies — 0.15-0.25 s of the
-        kernel wall on the match-heavy gates, r12 cProfile), but the
-        Arrow serializer immediately reads the frame back column by
-        column, so consolidation is pure waste. ``arrays_to_mgr``
-        exposes ``consolidate=False``; fall back to the public path on
-        any pandas-internals drift."""
-        try:
-            from pandas.core.internals.construction import arrays_to_mgr
+    arrow_schema = to_arrow_schema(out_schema)
+    temporal = [
+        isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType, T.DateType))
+        for f in out_schema.fields
+    ]
 
-            mgr = arrays_to_mgr(
-                arrays,
-                col_index,
-                index,
-                verify_integrity=False,
-                typ="block",
-                consolidate=False,
-            )
-            return pd.DataFrame._from_mgr(mgr, axes=mgr.axes)
-        except Exception:  # pragma: no cover — pandas-internals drift
-            return pd.DataFrame._from_arrays(
-                arrays,
-                columns=col_index,
-                index=index,
-                verify_integrity=False,
-            )
-
-    def _frame_from_batch(cols, m):
-        """Assemble the batch-emitted columns; None = caller must fall
-        back to the per-match row path (pandas/numpy shape surprise)."""
+    def _table(cols) -> pa.Table:
+        """Output columns (arrays from the vectorized emitters, or tuples
+        of per-match cells) as a table of the declared schema. A temporal
+        column that is not already datetime64 goes through pandas first:
+        pyarrow rejects an object array of ``np.datetime64`` scalars for a
+        timestamp or date type."""
         arrays = []
-        for build, arr in zip(col_builders, cols):
-            if build is not None and arr.dtype == object:
-                arr = build(arr)
-                if not isinstance(arr, np.ndarray) or arr.ndim != 1:
-                    return None
-            arrays.append(arr)
-        try:
-            return _df_from_arrays(arrays, pd.RangeIndex(m))
-        except Exception:  # pragma: no cover — pandas-internals drift
-            return None
+        for field, tmp, col in zip(arrow_schema, temporal, cols):
+            if tmp and not (isinstance(col, np.ndarray) and col.dtype.kind == "M"):
+                col = pd.Series(col).to_numpy()
+            arrays.append(pa.array(col, type=field.type, from_pandas=True))
+        return pa.Table.from_arrays(arrays, schema=arrow_schema)
 
-    # Reused empty-output template: constructing an empty DataFrame per
-    # matchless key costs ~0.5 ms of pandas machinery; the same (never
-    # mutated, only Arrow-serialized) instance serves every such key.
-    # Dtypes must come from the schema, not pandas' float64 default for
-    # empty columns: a float64 empty column under a TimestampType field
-    # fails Arrow serialization ("Unsupported cast from double to
-    # timestamp") when a batch holds only matchless keys — a latent
-    # pre-r11 bug surfaced by test_cep_fast_frame_construction_types.
-    empty_out = pd.DataFrame(
-        {
-            f.name: np.array(
-                [],
-                dtype="datetime64[ns]"
-                if isinstance(
-                    f.dataType,
-                    (T.TimestampType, T.TimestampNTZType, T.DateType),
-                )
-                else object,
-            )
-            for f in out_schema.fields
+    def run(tbl: pa.Table) -> pa.Table:
+        # One stable Arrow sort over the ORDER BY columns: ties keep input
+        # order and nulls (and NaN) sort last.
+        tbl = tbl.take(pc.sort_indices(tbl, [(c, "ascending") for c in order_by]))
+        arrs = {c: tbl[c].to_numpy(zero_copy_only=False) for c in data_cols}
+        bools = {
+            n: pc.fill_null(tbl[c], False).to_numpy(zero_copy_only=False)
+            for n, c in bool_cols.items()
         }
-    )
-    col_index = pd.Index(out_cols)
-
-    def _col_builder(dt):
-        """Per-column array constructor for the fast output path, chosen
-        ONCE from the declared schema. Datetime-valued columns must reach
-        the serializer as datetime64 (its TimestampType converter breaks
-        on object dtype — r11 regression test stream_all_rows_event_time
-        caught exactly this); pd.Series inference over the flat column
-        reproduces the dtype the row-oriented path produced. Complex
-        types (array/map/struct cells are sequences — np.array would
-        build 2-D blocks) get no fast builder, disabling the fast path."""
-        if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType)):
-            return lambda col: pd.Series(col).to_numpy()
-        if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
-            return None
-        return lambda col: np.array(col, dtype=object)
-
-    col_builders = [_col_builder(f.dataType) for f in out_schema.fields]
-    fast_frames = all(b is not None for b in col_builders)
-
-    def _frame_from_rows(rows):
-        """Column-oriented output construction. The row-oriented
-        ``pd.DataFrame(rows, columns=...)`` path walks every cell through
-        nested_data_to_arrays + per-column object inference (~0.5 ms per
-        key — 50-58% of the whole kernel wall on the one-row-per-match
-        gates, r11 cProfile); building the column arrays directly and
-        handing them straight to the block manager is ~5-10x cheaper.
-        Arrow serialization is unchanged: pyspark's _create_array applies
-        the same per-column ``correct_dtype`` converter (astype from the
-        declared schema) to object columns as to inferred ones, so the
-        emitted Arrow batches are identical."""
-        if not fast_frames:
-            return pd.DataFrame(rows, columns=out_cols)
-        arrays = []
-        for build, col in zip(col_builders, zip(*rows)):
-            a = build(col)
-            if a.ndim != 1:  # sequence cells in an atomic-typed column
-                return pd.DataFrame(rows, columns=out_cols)
-            arrays.append(a)
-        try:
-            return _df_from_arrays(arrays, pd.RangeIndex(len(rows)))
-        except Exception:  # pragma: no cover — pandas-internals drift
-            return pd.DataFrame(rows, columns=out_cols)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Stable numpy ordering instead of pandas sort_values: argsort/
-        # lexsort over only the ORDER BY arrays, applied per consumed
-        # column. sort_values rebuilds the whole frame through pandas
-        # block machinery (~120 us per key group — the kernel runs once
-        # per key, so ~0.2 s per query at 1500 keys; r11 measured).
-        # Ordering ties keep input order in both paths (stable sorts).
-        # Falls back to the pandas path for order dtypes numpy cannot
-        # compare (e.g. None inside object columns).
-        sym_np = pdf["__sym"].to_numpy()
-        try:
-            okeys = [pdf[c].to_numpy() for c in reversed(order_by)]
-            idx = (
-                np.argsort(okeys[0], kind="stable")
-                if len(okeys) == 1
-                else np.lexsort(okeys)
-            )
-            arrs = {c: pdf[c].to_numpy()[idx] for c in data_cols}
-            bools = {n: _np_bool(pdf[c])[idx] for n, c in bool_cols.items()}
-            sym_np = sym_np[idx]
-        except TypeError:
-            pdf = pdf.sort_values(order_by, kind="mergesort")
-            sym_np = pdf["__sym"].to_numpy()
-            arrs = {c: pdf[c].to_numpy() for c in data_cols}
-            bools = {n: _np_bool(pdf[c]) for n, c in bool_cols.items()}
+        sym_np = tbl["__sym"].to_numpy(zero_copy_only=False)
         key_vals = [arrs[c][0] for c in partition_by]
-        n = len(pdf)
+        n = tbl.num_rows
         # ambiguous iff any row satisfies two column defines or a callable
         # define exists — only then pay for the Python NFA. Nullable
         # patterns under a non-default skip mode also take the NFA: the
@@ -1288,15 +1175,10 @@ def match_recognize(
                     los = np.fromiter((s[0] for s in matches), np.int64, m)
                     his = np.fromiter((s[1] for s in matches), np.int64, m)
                     if all_rows:
-                        frame = _frame_from_batch(
-                            *_emit_all_rows_batch(key_vals, los, his, arrs, syms)
+                        return _table(
+                            _emit_all_rows_batch(key_vals, los, his, arrs, syms)[0]
                         )
-                    else:
-                        frame = _frame_from_batch(
-                            _emit_batch(key_vals, los, his, arrs, syms), m
-                        )
-                    if frame is not None:
-                        return frame
+                    return _table(_emit_batch(key_vals, los, his, arrs, syms))
         else:
             syms = None
 
@@ -1329,7 +1211,7 @@ def match_recognize(
                 probe=False,
             )
         rows = _match_rows(fe, key_vals, matches, arrs, syms, order_by)
-        return _frame_from_rows(rows) if rows else empty_out
+        return _table(zip(*rows)) if rows else arrow_schema.empty_table()
 
     # Explicit repartition: AQE would coalesce this tiny shuffle to 1-2
     # tasks, serializing the (CPU-bound) Python stage; a user repartition
@@ -1341,7 +1223,7 @@ def match_recognize(
     if not pre_partitioned:
         n_part = proj.sparkSession.sparkContext.defaultParallelism
         proj = proj.repartition(n_part, *partition_by)
-    return proj.groupBy(*partition_by).applyInPandas(run, out_schema)
+    return proj.groupBy(*partition_by).applyInArrow(run, out_schema)
 
 
 def _restart(after_match, skip_sym, skip_first, lo, hi, pairs) -> int:

@@ -25,7 +25,7 @@ exploration path (documented; Calcite resolves the same ambiguity by
 thread priority).
 
 The matcher is pure Python and only runs inside the per-key
-``applyInPandas`` kernel (``plans/cep.py``) — the 100-TB shape is
+``applyInArrow`` kernel (``plans/cep.py``) — the 100-TB shape is
 unchanged: one shuffle on PARTITION BY, Arrow batches in, the NFA walks
 a per-key row window that SQL MATCH_RECOGNIZE semantics require to be
 co-located anyway.

@@ -8,6 +8,9 @@ LAST ROW), per-partition isolation, and measures.
 
 from __future__ import annotations
 
+import datetime
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -3335,109 +3338,150 @@ def test_stream_compound_order_with_prev_nav(spark):
 # -- vectorized emitters and frame construction ----------------------------
 
 
-def test_cep_numpy_order_matches_and_fallback_engages(spark):
-    """The numpy argsort/lexsort ordering must agree with the old pandas
-    sort_values (ties keep input order — both stable), and order columns
-    numpy cannot compare (None in object arrays) must fall back instead
-    of crashing."""
-    from incubator_beam_spark.plans.cep import match_recognize
-
+def test_cep_order_by_nulls_last_ties_in_input_order(spark):
+    """The kernel's per-key sort puts NULL ORDER BY values last (a NULL
+    long, and a NULL string under a two-column ORDER BY) and keeps tied
+    rows in input order (a stable sort)."""
     rows = [
-        # user 1: S C C P with an order tie on (grp) broken by arrival
+        # user 1: S C C P
         (1, 10, "signup", "a"),
         (1, 11, "click", "a"),
         (1, 12, "click", "a"),
         (1, 13, "purchase", "a"),
-        # user 2: no match at all (exercises the reused empty frame)
+        # user 2: no match at all (an empty output table)
         (2, 20, "click", "b"),
         (2, 21, "click", "b"),
+        # user 3: the purchase has a NULL event_id, so it sorts last
+        (3, None, "purchase", "c"),
+        (3, 31, "signup", "c"),
+        (3, 32, "click", "c"),
+        # user 4: click and purchase tie on event_id; input order decides
+        (4, 40, "signup", "d"),
+        (4, 41, "click", "d"),
+        (4, 41, "purchase", "d"),
+        # user 5: the purchase has a NULL tag, so it sorts last by tag
+        (5, 50, "purchase", None),
+        (5, 51, "signup", "e"),
+        (5, 52, "click", "e"),
     ]
+    # one input partition: the shuffle then delivers each key's rows in
+    # input order, which is what the tie on user 4 reads
     ev = spark.createDataFrame(
         rows, "user_id long, event_id long, event_type string, tag string"
-    )
+    ).coalesce(1)
+    define = {
+        "S": F.col("event_type") == "signup",
+        "C": F.col("event_type") == "click",
+        "P": F.col("event_type") == "purchase",
+    }
     out = match_recognize(
         ev,
         partition_by=["user_id"],
         order_by=["event_id"],
-        define={
-            "S": F.col("event_type") == "signup",
-            "C": F.col("event_type") == "click",
-            "P": F.col("event_type") == "purchase",
-        },
+        define=define,
         pattern="S C{1,4} P",
         measures={"n": ("count", None), "last_c": ("last", "C", "event_id")},
     ).collect()
-    assert [(r.user_id, r.n, r.last_c) for r in out] == [(1, 4, 12)]
+    # by event_id alone user 5 orders P S C: no match
+    assert sorted((r.user_id, r.n, r.last_c) for r in out) == [
+        (1, 4, 12), (3, 3, 32), (4, 3, 41)
+    ]
 
-    # two-column ORDER BY exercises np.lexsort
     out2 = match_recognize(
         ev,
         partition_by=["user_id"],
         order_by=["tag", "event_id"],
-        define={
-            "S": F.col("event_type") == "signup",
-            "C": F.col("event_type") == "click",
-            "P": F.col("event_type") == "purchase",
-        },
+        define=define,
         pattern="S C{1,4} P",
         measures={"n": ("count", None)},
     ).collect()
-    assert [(r.user_id, r.n) for r in out2] == [(1, 4)]
-
-
-def test_cep_fast_frame_construction_types(spark):
-    """The column-oriented output construction must round-trip every
-    column kind the serializer treats specially: timestamps (object
-    dtype breaks its TimestampType converter — must go through datetime
-    inference), nullable ints (None in first/last measures), strings,
-    and doubles — in both one-row and ALL ROWS modes."""
-    from incubator_beam_spark.plans.cep import match_recognize
-
-    rows = [
-        (1, 1, "a", "2024-01-01 00:00:01", 10.5, "x"),
-        (1, 2, "b", "2024-01-01 00:00:02", None, None),
-        (1, 3, "c", "2024-01-01 00:00:03", 30.5, "z"),
-        (2, 4, "a", "2024-01-01 00:00:04", 1.0, "w"),
+    assert sorted((r.user_id, r.n) for r in out2) == [
+        (1, 4), (3, 3), (4, 3), (5, 3)
     ]
+
+
+# SQL type, the value on A rows, the value on C rows (B rows hold NULL)
+_BOUNDARY_TYPES = {
+    "timestamp": (
+        "TIMESTAMP",
+        datetime.datetime(2024, 1, 1, 0, 0, 1),
+        datetime.datetime(2024, 1, 1, 0, 0, 3),
+    ),
+    "date": ("DATE", datetime.date(2024, 1, 1), datetime.date(2024, 3, 1)),
+    "decimal": ("DECIMAL(10,2)", Decimal("1.25"), Decimal("-3.50")),
+    "timestamp_ntz": (
+        "TIMESTAMP_NTZ",
+        datetime.datetime(2024, 1, 1, 0, 0, 1),
+        datetime.datetime(2024, 1, 1, 0, 0, 3),
+    ),
+    "binary": ("BINARY", b"\x00a", b"zz"),
+    "array": ("ARRAY<BIGINT>", [1, 2], []),
+}
+
+
+@pytest.mark.parametrize("kind", list(_BOUNDARY_TYPES))
+def test_cep_arrow_boundary_types(spark, kind):
+    """Measure cells of each column type survive the Arrow round trip:
+    FIRST/LAST over a value, a NULL cell and a symbol that never binds,
+    through the vectorized ONE ROW emitter, the per-match row path (a
+    float SUM forces it) and ALL ROWS (the vectorized emitter on key 1's
+    258 matched rows, the row loop on key 2's three). Key 3 never
+    matches, so its output is an empty table."""
+    sql_type, va, vc = _BOUNDARY_TYPES[kind]
+    blocks = {1: 86, 2: 1}
+    rows = [
+        (k, i, et, x, 1.5)
+        for k, n in blocks.items()
+        for i, (et, x) in enumerate([("a", va), ("b", None), ("c", vc)] * n)
+    ] + [(3, 0, "c", vc, 1.5)]
     ev = spark.createDataFrame(
-        rows, "k long, eid long, et string, ts string, v double, s string"
-    ).selectExpr("k", "eid", "et", "CAST(ts AS TIMESTAMP) AS ts", "v", "s")
-    define = {
-        "A": F.col("et") == "a",
-        "B": F.col("et") == "b",
-        "C": F.col("et") == "c",
-    }
-    out = match_recognize(
-        ev,
+        rows, f"k long, eid long, et string, x {sql_type}, f double"
+    )
+    kw = dict(
         partition_by=["k"],
         order_by=["eid"],
-        define=define,
-        pattern="A B C",
-        measures={
-            "first_ts": ("first", "A", "ts"),
-            "b_v": ("last", "B", "v"),
-            "b_s": ("last", "B", "s"),
-            "sum_v": ("sum", None, "v"),
-            "n": ("count", None),
+        define={
+            "A": F.col("et") == "a",
+            "B": F.col("et") == "b",
+            "C": F.col("et") == "c",
+            "D": F.col("et") == "d",
         },
+        pattern="A B D? C",
+    )
+    one_row = {
+        "first_a": ("first", "A", "x"),
+        "last_b": ("last", "B", "x"),
+        "last_any": ("last", None, "x"),
+        "first_d": ("first", "D", "x"),
+    }
+    want = [
+        (k, m, va, None, vc, None)
+        for k, n in blocks.items()
+        for m in range(1, n + 1)
+    ]
+    vec = match_recognize(ev, measures=one_row, **kw).collect()
+    assert sorted(tuple(r) for r in vec) == want
+    row_path = match_recognize(
+        ev, measures={**one_row, "f_sum": ("sum", None, "f")}, **kw
     ).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r.k, r.match_number, r.n) == (1, 1, 3)
-    assert r.first_ts.isoformat() == "2024-01-01T00:00:01"
-    assert r.b_v is None and r.b_s is None and r.sum_v == 41.0
+    assert sorted(tuple(r) for r in row_path) == [(*t, 4.5) for t in want]
 
-    out2 = match_recognize(
+    all_rows = match_recognize(
         ev,
-        partition_by=["k"],
-        order_by=["ts"],  # timestamp ORDER BY rides the all-rows output
-        define=define,
-        pattern="A B C",
-        measures={"rn": ("count", None)},
+        measures={
+            "first_a": ("first", "A", "x"),
+            "last_any": ("last", None, "x"),
+            "final_last_c": ("last", "C", "x", "final"),
+        },
         all_rows=True,
+        **kw,
     ).collect()
-    assert [(r.k, r.classifier, r.ts.second, r.rn) for r in out2] == [
-        (1, "A", 1, 1), (1, "B", 2, 2), (1, "C", 3, 3)
+    # (k, match_number, classifier, eid, first_a, last_any, final_last_c)
+    assert sorted(tuple(r) for r in all_rows) == [
+        (k, m, sym, 3 * (m - 1) + j, va, last, vc)
+        for k, n in blocks.items()
+        for m in range(1, n + 1)
+        for j, (sym, last) in enumerate((("A", va), ("B", None), ("C", vc)))
     ]
 
 

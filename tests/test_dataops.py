@@ -442,14 +442,17 @@ def test_star_forest_check(spark, edges, star):
 
 
 def test_connected_components_runs_no_round_on_contracted_stars(spark):
-    """Five 100-node paths, the ``doc_neardup_clusters`` graph: the local
-    contraction already leaves each path as a star on its minimum, so
-    building the result launches only the pre-loop jobs and one
-    star-forest check, and no large-star/small-star round."""
+    """Five 100-node paths plus 10 isolated nodes, the
+    ``doc_neardup_clusters`` graph: the local contraction already leaves
+    each path as a star on its minimum, so building the result launches
+    only the pre-loop jobs and one star-forest check, and no
+    large-star/small-star round. Writing the result computes the roots
+    and the singletons in one pass over the final edges."""
     ids = spark.range(500)
     edges = ids.filter(F.col("id") % 100 != 0).select(
         F.col("id").alias("src"), (F.col("id") - 1).alias("dst")
     )
+    nodes = spark.range(510).select(F.col("id").alias("node"))
     _, pre = jobs_launched(
         spark,
         lambda: dedup._is_star_forest(
@@ -457,10 +460,18 @@ def test_connected_components_runs_no_round_on_contracted_stars(spark):
             .localCheckpoint(eager=False)
         ),
     )
-    out, built = jobs_launched(spark, lambda: dedup.connected_components(edges))
+    out, built = jobs_launched(
+        spark, lambda: dedup.connected_components(edges, nodes=nodes)
+    )
     assert built <= pre, f"{built} build jobs, pre-loop plus one check is {pre}"
-    got = {r.node: r.component for r in out.collect()}
-    assert got == {i: i - i % 100 for i in range(500)}
+    _, written = jobs_launched(
+        spark, lambda: out.write.format("noop").mode("overwrite").save()
+    )
+    assert written <= 3, f"{written} jobs to write the labels"
+    got = [(r.node, r.component) for r in out.collect()]
+    assert sorted(got) == [
+        (i, i - i % 100 if i < 500 else i) for i in range(510)
+    ]
 
 
 def test_neardup_dedup_end_to_end(spark):

@@ -111,7 +111,7 @@ def test_simhash_vectorized_kernel_plan(spark):
 
 def test_cep_single_shuffle_and_pruned_scan(spark):
     plan = plan_of(spark, "cep_match_recognize")
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
     assert plan.count("Exchange") <= 2  # one key repartition (+AQE read)
     # measures touch event_id/ts/user_id/event_type only: props/value pruned
     read = plan.split("ReadSchema")[1].split("\n")[0]
@@ -756,7 +756,7 @@ def test_match_recognize_prev_single_repartition_exchange(spark):
     """The PREV/NEXT navigation pipeline must keep its AQE-proof shape
     (VERDICT r6 item #6): exactly ONE Exchange — the coalesce-exempt
     REPARTITION_BY_NUM on the partition keys placed BEFORE the lag
-    Window — feeding Window then FlatMapGroupsInPandas. If
+    Window — feeding Window then FlatMapGroupsInArrow. If
     ``pre_partitioned`` or the repartition is removed, the Window's own
     ENSURE_REQUIREMENTS exchange reappears (AQE coalesces it to 1-2
     tasks and serializes the Python kernel stage — the measured r6
@@ -766,7 +766,7 @@ def test_match_recognize_prev_single_repartition_exchange(spark):
     assert "REPARTITION_BY_NUM" in plan
     assert "ENSURE_REQUIREMENTS" not in plan
     # shape: the single exchange sits below both Window and the kernel
-    assert "Window" in plan and "FlatMapGroupsInPandas" in plan
+    assert "Window" in plan and "FlatMapGroupsInArrow" in plan
 
 
 def test_python_datasource_planned_scan(spark):
@@ -918,6 +918,7 @@ def test_crawl_funnel_extraction_scan_side_and_no_text_shuffle(spark):
     # exactly one Python stage family: the FFD packer (mapInPandas).
     # extraction/quality/checksums must stay JVM-side.
     assert "FlatMapGroupsInPandas" not in plan
+    assert "FlatMapGroupsInArrow" not in plan
     assert "BatchEvalPython" not in plan
     # band-key exchanges carry (band, key, doc_id)-shaped rows; no
     # exchange may carry the extracted text column itself
